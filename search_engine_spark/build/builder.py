@@ -83,9 +83,9 @@ class IndexBuilder:
         # content; the batch phase re-reads it from the corpus source).
         slim = corpus.select(
             "repo", "path", "commit", "lang",
-            F.sha2(F.col("content"), 256).alias("sha256"),
+            F.sha2(F.col(self.body_col), 256).alias("sha256"),
         )
-        with_ids = assign_doc_ids(slim, n_rows=n_in)
+        with_ids = assign_doc_ids(slim, n_rows=n_in, trust_sha256=True)
         # doc/title token lengths are NOT computed here — the batch phase
         # tokenizes exactly once and emits doclens through the posting
         # shuffle (reserved term "", build/kernels.py)
@@ -385,7 +385,6 @@ class IndexBuilder:
             term_stats.repartition("bucket")
             .sortWithinPartitions("term")
             .write.mode("overwrite")
-            .option("parquet.bloom.filter.enabled#term", "true")
             .partitionBy("bucket")
             .parquet(self.store.term_stats_path)
         )
@@ -535,7 +534,6 @@ class IndexBuilder:
                 merged.repartition("bucket")
                 .sortWithinPartitions("term")
                 .write.mode("overwrite")
-                .option("parquet.bloom.filter.enabled#term", "true")
                 .partitionBy("bucket")
                 .parquet(staging)
             )

@@ -1005,7 +1005,7 @@ p AS (
          coalesce(sum(n_tokens) OVER (
            ORDER BY quality DESC, id
            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-         ), 0) AS prefix_tokens
+         ), 0)::BIGINT AS prefix_tokens
   FROM q
 )
 SELECT id, n_tokens, quality, prefix_tokens

@@ -5,7 +5,7 @@
 inverted_index.py:1845-1866``).  One query (or a batch of queries — they
 share the scan) executes as:
 
-``driver: tokenize → term-stats lookup (partition-pruned) → compile plan``
+``driver: tokenize → term-stats lookup (pyarrow, no Spark job) → compile``
 ``cluster: pruned postings scan  ⟂cogroup⟂  doclens scan``
 ``        → applyInPandas(chunk kernel: decode + set algebra + BM25 +``
 ``          block-max WAND + chunk top-k)``
@@ -13,9 +13,9 @@ share the scan) executes as:
 
 Scan properties (checked in tests via ``explain``): the postings read is
 pruned to the query terms' hash-bucket partitions, ``term IN (...)`` is
-pushed to parquet (bloom filters on ``term``), and only the columns the
-query needs are read — position columns only for phrase queries, block
-metadata only for WAND-eligible ones.
+pushed to parquet (postings carry bloom filters on ``term``), and only
+the columns the query needs are read — position columns only for phrase
+queries, block metadata only for WAND-eligible ones.
 """
 
 from __future__ import annotations
@@ -117,6 +117,10 @@ class SearchEngine:
         # the fast path.  doclens (O(num_docs/chunk_docs) rows) are cached.
         self._postings = self.store.read_postings()
         self._doclens = self.store.read_doclens().cache()
+        # the docs table is append-only, so pinning its file listing here
+        # matches the pinned batch list; resolving it once also spares
+        # every doc-info / filter / facet call a schema-inference job
+        self.docs = self.store.read_docs()
         self._corrector = None
         # WAND skip-rate diagnostics: off by default (accumulator traffic
         # per task is tiny but nonzero); enable_wand_stats() turns it on
@@ -357,7 +361,7 @@ class SearchEngine:
         both join sides are O(num_docs / chunk_docs) rows, so the join
         stays small no matter how wide the filter is."""
         return (
-            self.store.read_docs()
+            self.docs
             .where(doc_filter)
             .select(
                 F.floor(
@@ -414,7 +418,7 @@ class SearchEngine:
         ).select(*cols)
 
         facets = (
-            self.store.read_docs()
+            self.docs
             .select(
                 F.floor(
                     F.col("doc_id") / self.config.chunk_docs
@@ -785,9 +789,7 @@ class SearchEngine:
         # where eager would pay extra serialized job floors up front
         # (measured 0.94 vs 0.74 s warm-request p50 at 40k docs).
         ranked = ranked.localCheckpoint(eager=False)
-        docs = self.store.read_docs().select(
-            "doc_id", "repo", "path", "commit", "lang"
-        )
+        docs = self.docs.select("doc_id", "repo", "path", "commit", "lang")
         hit_ids = ranked.select("doc_id").distinct()
         docs_hit = docs.join(F.broadcast(hit_ids), "doc_id", "leftsemi")
         if corpus is not None:

@@ -51,12 +51,12 @@ bit-identical to ``SearchEngine.search`` + ``with_doc_info``):
   join (the 100-TB guard: never ship an unbounded id list).
 * **A snapshot-scoped result cache.**  Real query logs are Zipf —
   repeated queries dominate — and a cache hit costs zero Spark jobs.
-  Soundness: ``SearchEngine`` resolves its committed-batch list and
-  tombstones ONCE at open (query/engine.py:112-147), so the engine's
-  view of the index is immutable for its lifetime and a cache entry
-  can never be staler than the engine serving it.  New data requires a
-  new ``SearchService`` (exactly as it already requires a new engine),
-  which starts cold.  Entries store the full rank-ordered row list at
+  Soundness: ``SearchEngine`` resolves its committed-batch list,
+  tombstones and docs table ONCE at open (``SearchEngine.__init__``), so
+  the engine's view of the index is immutable for its lifetime and a
+  cache entry can never be staler than the engine serving it.  New data
+  requires a new ``SearchService`` (exactly as it already requires a new
+  engine), which starts cold.  Entries store the full rank-ordered row list at
   the k they were computed with; smaller-k requests take the prefix,
   larger-k requests miss and recompute.  Bounded LRU
   (``cache_size`` entries, 0 disables).
@@ -255,9 +255,7 @@ class _MicroBatcher:
             }
         missing = [i for i in ids if i not in info]
         if missing:
-            docs = eng.store.read_docs().select(
-                "doc_id", "repo", "path", "commit", "lang"
-            )
+            docs = eng.docs.select("doc_id", "repo", "path", "commit", "lang")
             fetched = {
                 r.doc_id: r
                 for r in docs.where(F.col("doc_id").isin(missing)).collect()

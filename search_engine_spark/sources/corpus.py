@@ -105,15 +105,19 @@ def assign_doc_ids(
     corpus: DataFrame,
     n_partitions: int | None = None,
     n_rows: int | None = None,
+    trust_sha256: bool = False,
 ) -> DataFrame:
     """Adds dense ``doc_id`` (0..N-1 in (repo, path, commit) order) and
     ``sha256`` (per-row invariant vs the source corpus).
 
-    If the input already carries a ``sha256`` column it is trusted and
-    ``content`` is not required.  Bulk callers exploit this: hashing is a
-    per-row map, so computing ``sha256`` *before* this function and
-    projecting ``content`` away means the range shuffle (and the persist
-    below) moves ~150-byte key rows instead of whole documents — at
+    ``sha256`` is computed from ``content``, overwriting any ``sha256``
+    column the input carries (a user corpus's own column is not the
+    invariant ``verify_corpus`` checks).  Only with ``trust_sha256`` is an
+    existing column kept and ``content`` not required — for
+    ``IndexBuilder.build_docs``' slim path: hashing is a per-row map, so
+    computing ``sha256`` *before* this function and projecting
+    ``content`` away means the range shuffle (and the persist below)
+    moves ~150-byte key rows instead of whole documents — at
     100 TB that is the difference between shuffling the corpus and
     shuffling ~1% of it (measured: the full-row form filled 56 GB of
     block-manager scratch at 163.84M docs and died; the slim form fits).
@@ -154,6 +158,6 @@ def assign_doc_ids(
         .join(F.broadcast(offset_df), "_pid")
         .withColumn("doc_id", F.col("_offset") + F.col("_rn"))
     )
-    if "sha256" not in corpus.columns:
+    if not trust_sha256:
         out = out.withColumn("sha256", F.sha2(F.col("content"), 256))
     return out.drop("_pid", "_rn", "_offset")

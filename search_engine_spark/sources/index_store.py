@@ -28,9 +28,13 @@ manifest would give us):
 All binary columns are delta+varbyte (``functions/codec.py``).  The
 reference keeps the same information in packed binary files + a marisa
 trie + pickles (``/root/reference/search_engine/ingestion.py:63-171``,
-``convert_index_to_marisa.py``); here the term dictionary is replaced by
-hash-bucket partition pruning + parquet min/max + bloom filters on
-``term``.
+``convert_index_to_marisa.py``); here the term dictionary is the
+``term_stats`` table, looked up on the driver with pyarrow
+(``term_stats_for``): hash-bucket directory pruning + row-group min/max
+over term-sorted bucket files, no Spark job.  ``term_stats`` carries no
+bloom filters (its terms are unique, so a filter would be as large as
+the column and nothing reads it); postings keep bloom filters on
+``term`` for the Spark scan's pushed ``term IN``.
 """
 
 from __future__ import annotations
@@ -295,17 +299,29 @@ class IndexStore:
         )
 
     def read_stats(self) -> dict:
-        row = self.spark.read.parquet(self.stats_path).head()
-        return row.asDict()
+        """The one-row collection stats table, read DRIVER-SIDE with
+        pyarrow (no Spark job; every engine open pays this read)."""
+        import pyarrow.parquet as pq
+
+        return pq.read_table(self.stats_path).to_pylist()[0]
 
     def read_term_stats(self) -> DataFrame:
         return self.spark.read.parquet(self.term_stats_path)
 
     def term_stats_for(self, tokens: list[str]) -> dict[str, int]:
-        """df per token — partition-pruned lookup (bucket IN + term IN are
-        both pushed to the parquet scan).  Results are memoized per store
-        instance (the index is immutable once opened), so repeated query
-        terms skip the lookup job entirely."""
+        """df per token, read DRIVER-SIDE with pyarrow: only the query
+        terms' ``bucket=B`` directories are opened, and ``term IN (...)``
+        is checked against row-group min/max statistics (bucket files are
+        term-sorted, so row groups that cannot hold a term are skipped).
+        A query's term-stats lookup thus runs no Spark job.  Results are
+        memoized per store instance (the index is immutable once opened).
+
+        A missing ``term_stats`` root raises — e.g. a reader racing the
+        directory swap of ``finalize_incremental`` — rather than pricing
+        every term at df 0; a missing bucket directory under an existing
+        root is a bucket with no terms."""
+        import pyarrow.dataset as pads
+
         if not tokens:
             return {}
         cache = getattr(self, "_df_cache", None)
@@ -313,18 +329,28 @@ class IndexStore:
             cache = self._df_cache = {}
         missing = sorted({t for t in tokens if t not in cache})
         if missing:
-            buckets = sorted(
-                {term_bucket(t, self.config.n_term_buckets) for t in missing}
-            )
-            rows = (
-                self.read_term_stats()
-                .where(
-                    F.col("bucket").isin(buckets) & F.col("term").isin(missing)
+            by_bucket: dict[int, list[str]] = {}
+            for t in missing:
+                b = term_bucket(t, self.config.n_term_buckets)
+                by_bucket.setdefault(b, []).append(t)
+            found: dict[str, int] = {}
+            for b, terms in sorted(by_bucket.items()):
+                path = os.path.join(self.term_stats_path, f"bucket={b}")
+                if not os.path.isdir(path):
+                    continue
+                tbl = pads.dataset(path, format="parquet").to_table(
+                    columns=["term", "df"],
+                    filter=pads.field("term").isin(terms),
                 )
-                .select("term", "df")
-                .collect()
-            )
-            found = {r.term: r.df for r in rows}
+                found.update(
+                    zip(tbl["term"].to_pylist(), tbl["df"].to_pylist())
+                )
+            # checked after the reads, so a root that vanished mid-lookup
+            # (bucket dirs then look absent) raises too
+            if not os.path.isdir(self.term_stats_path):
+                raise FileNotFoundError(
+                    f"term_stats table missing: {self.term_stats_path}"
+                )
             for t in missing:
                 cache[t] = found.get(t, 0)
         return {t: cache[t] for t in set(tokens) if cache[t] > 0}

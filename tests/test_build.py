@@ -372,10 +372,57 @@ def test_assign_doc_ids_trusts_precomputed_sha(spark):
         "repo", "path", "commit", "lang",
         F.sha2(F.col("content"), 256).alias("sha256"),
     )
-    out_slim = assign_doc_ids(slim).select(
+    out_slim = assign_doc_ids(slim, trust_sha256=True).select(
         "doc_id", "repo", "path", "commit", "sha256"
     )
     assert "content" not in out_slim.columns  # content never re-enters
     a = sorted(tuple(r) for r in out_full.collect())
     b = sorted(tuple(r) for r in out_slim.collect())
     assert a == b
+
+
+def test_assign_doc_ids_overwrites_foreign_sha(spark):
+    """A corpus's own ``sha256`` column is not the content hash: without
+    ``trust_sha256`` it is recomputed from ``content``."""
+    from search_engine_spark.sources.corpus import assign_doc_ids
+
+    rows = synth_corpus(n_docs=40, seed=3)
+    corpus = spark.createDataFrame(rows).withColumn("sha256", F.lit("bogus"))
+    out = assign_doc_ids(corpus).select("path", "sha256").collect()
+    want = {
+        r["path"]: hashlib.sha256(r["content"].encode("utf-8")).hexdigest()
+        for r in rows
+    }
+    assert {r.path: r.sha256 for r in out} == want
+
+
+def test_build_ignores_foreign_sha_column(spark, tmp_path):
+    """A corpus carrying a bogus ``sha256`` column builds, and the docs
+    table holds the real content hashes."""
+    rows = synth_corpus(n_docs=70, seed=5)
+    corpus = spark.createDataFrame(rows).withColumn("sha256", F.lit("bogus"))
+    builder = IndexBuilder(spark, str(tmp_path / "idx"), CFG)
+    builder.build_all(corpus)
+    res = builder.verify_corpus(corpus)
+    assert res == {"rows": len(rows), "missing": 0, "sha_mismatch": 0}
+
+
+def test_non_default_body_col_builds_and_verifies(spark, tmp_path):
+    """``body_col`` names the hashed column as well as the tokenized one:
+    a corpus without ``content`` builds, verifies clean and searches."""
+    from search_engine_spark.plans.parser import SearchMode
+    from search_engine_spark.query.engine import SearchEngine
+
+    rows = synth_corpus(n_docs=70, seed=5)
+    corpus = spark.createDataFrame(rows).withColumnRenamed("content", "body")
+    d = str(tmp_path / "idx")
+    builder = IndexBuilder(spark, d, CFG, body_col="body")
+    builder.build_all(corpus)
+    res = builder.verify_corpus(corpus)
+    assert res == {"rows": len(rows), "missing": 0, "sha_mismatch": 0}
+    got = SearchEngine(spark, d, CFG).search("zqmerge", SearchMode.OR)
+    oracle = RefSemIndex(corpus_to_tokens(rows))
+    _n, ref = oracle.search_text("zqmerge", SearchMode.OR)
+    assert [r.doc_id for r in sorted(got.collect(), key=lambda r: r.rank)] == [
+        doc for _s, doc in ref
+    ]

@@ -30,11 +30,35 @@ def _duck(sql: str):
             con.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
             )
-    cur = con.execute(sql)
-    cols = [d[0] for d in cur.description]
-    rows = cur.fetchall()
+    rel = con.sql(sql)
+    cols, types = rel.columns, [str(t) for t in rel.types]
+    rows = rel.fetchall()
     con.close()
-    return cols, rows
+    return cols, types, rows
+
+
+_INT_TYPES = {"tinyint", "smallint", "int", "integer", "bigint"}
+_FLOAT_TYPES = {"float", "double"}
+
+
+def _type_family(t: str) -> str:
+    """Coarse type family shared by Spark ``simpleString`` and DuckDB type
+    names.  Integer widths and float widths are interchangeable (the
+    driver's compare tolerates them); DuckDB's HUGEINT is not — integer
+    ``sum()`` aggregates and windows return it unless cast, and the
+    driver's hash does not match it against Spark's bigint."""
+    t = t.lower()
+    if t.endswith("[]"):
+        return f"array<{_type_family(t[:-2])}>"
+    if t.startswith("array<") and t.endswith(">"):
+        return f"array<{_type_family(t[6:-1])}>"
+    if t in _INT_TYPES:
+        return "integral"
+    if t in _FLOAT_TYPES:
+        return "floating"
+    if t in ("string", "varchar"):
+        return "string"
+    return t
 
 
 def _norm_cell(v):
@@ -91,11 +115,16 @@ def test_contract_matches_oracle(spark, name, fn, sql):
     if sql is None:
         assert len(spark_rows) >= 0  # rows-only check (driver's weak mode)
         return
-    duck_cols, duck_rows = _duck(sql)
+    duck_cols, duck_types, duck_rows = _duck(sql)
     # exact (unsorted) equality: the deterministic row order both sides
     # emit is "sort by every select-list column left-to-right", so the
     # select-list column ORDER must match, not just the name set
     assert spark_cols == duck_cols, name
+    # per-column type echo: equal values in different type families
+    # (e.g. bigint vs HUGEINT) still fail the driver's hash
+    spark_fam = [_type_family(t) for _c, t in df.dtypes]
+    duck_fam = [_type_family(t) for t in duck_types]
+    assert spark_fam == duck_fam, (name, df.dtypes, duck_types)
     s_cols, s_rows = _normalize(spark_cols, spark_rows)
     d_cols, d_rows = _normalize(duck_cols, duck_rows)
     assert len(s_rows) == len(d_rows), (name, len(s_rows), len(d_rows))

@@ -501,3 +501,166 @@ def test_wand_matches_exhaustive_under_doc_filter(setup, spark):
             (r.doc_id, r.score) for r in sorted(rows, key=lambda r: r.rank)
         ]
         assert key(a) == key(b), query
+
+
+# ----- metadata lookups run on the driver, not as Spark jobs -----
+
+
+def test_compile_runs_no_spark_job(setup, spark, count_jobs):
+    """Tokenize, term-stats lookup and plan compile are driver-only: a
+    freshly opened engine (empty term-stats memo) compiles every mode
+    without starting a Spark job."""
+    engine, _oracle = setup
+    fresh = SearchEngine(spark, str(engine.store.dir), CFG)
+    with count_jobs() as jobs:
+        for query, mode in QUERIES:
+            fresh.compile(query, mode)
+    assert jobs == []
+
+
+def test_one_term_search_job_count(setup, count_jobs):
+    """A one-term search runs only the posting scan + scoring jobs: no
+    term-stats or schema-inference job rides along."""
+    engine, _oracle = setup
+    engine.search("zqshard", SearchMode.AND).collect()  # doclens cache warm
+    with count_jobs() as jobs:
+        got = engine.search("zqmerge", SearchMode.AND).collect()
+    assert got
+    assert 1 <= len(jobs) <= 3, jobs
+
+
+def _vocab(rows) -> list[str]:
+    return sorted(
+        {t for title, body in corpus_to_tokens(rows) for t in title + body}
+    )
+
+
+def _absent_bucket_term(store) -> str:
+    import os
+
+    from search_engine_spark.sources.index_store import term_bucket
+
+    present = set(os.listdir(store.term_stats_path))
+    for i in range(10_000):
+        t = f"absentbucket{i}"
+        if f"bucket={term_bucket(t, store.config.n_term_buckets)}" not in present:
+            return t
+    raise AssertionError("every bucket directory exists")
+
+
+def _assert_driver_lookup_matches_spark(spark, index_dir, cfg, vocab):
+    from pyspark.sql import functions as F
+
+    from search_engine_spark.sources.index_store import IndexStore
+
+    store = IndexStore(spark, index_dir, cfg)
+    store.load_meta_into_config()
+    absent = _absent_bucket_term(store)
+    tokens = vocab + [
+        "unknown_term_xyz", "AND", "OR", "NOT", "(", ")", '"', absent,
+    ]
+    # reference: the Spark read of term_stats
+    rows = (
+        store.read_term_stats()
+        .where(F.col("term").isin(tokens))
+        .select("term", "df")
+        .collect()
+    )
+    want = {r.term: r.df for r in rows}
+    assert set(want) >= set(vocab) and absent not in want
+    assert store.term_stats_for(tokens) == want
+    assert store.term_stats_for(tokens) == want  # memoized path
+    assert store.term_stats_for(vocab[:3]) == {t: want[t] for t in vocab[:3]}
+    assert store.term_stats_for([]) == {}
+
+
+def test_driver_term_stats_equal_spark_read(spark, tmp_path):
+    """Driver-side ``term_stats_for`` returns what a Spark read of
+    ``term_stats`` returns — in-vocabulary, out-of-vocabulary, operator
+    tokens and a term whose bucket directory does not exist — on a fresh
+    build, and again after each streaming ``advance()`` rewrites the
+    table through ``finalize_incremental``."""
+    import os
+
+    from pyspark.sql import types as T
+
+    from search_engine_spark.sources.index_store import IndexStore
+    from search_engine_spark.streaming import StreamingIndexer
+
+    # 64 buckets over a ~20-term vocabulary, so most bucket dirs are absent
+    cfg = EngineConfig(chunk_docs=32, chunks_per_batch=2, block_docs=8,
+                       n_term_buckets=64)
+    words = [f"w{i}" for i in range(16)]
+    rng = np.random.default_rng(11)
+    rows = [
+        {
+            "repo": "r", "path": f"d{i % 3}/f.txt", "commit": f"c{i:03d}",
+            "lang": "en",
+            "content": " ".join(
+                words[int(j)] for j in rng.zipf(1.5, size=12) % len(words)
+            ),
+        }
+        for i in range(96)
+    ]
+    vocab = _vocab(rows)
+    assert len(vocab) > 10
+
+    fresh_dir = str(tmp_path / "fresh")
+    IndexBuilder(spark, fresh_dir, cfg).build_all(spark.createDataFrame(rows))
+    _assert_driver_lookup_matches_spark(spark, fresh_dir, cfg, vocab)
+
+    schema = T.StructType.fromDDL(
+        "repo string, path string, commit string, lang string, content string"
+    )
+    cols = ["repo", "path", "commit", "lang", "content"]
+    src = str(tmp_path / "arrivals")
+    stream_dir = str(tmp_path / "stream")
+    indexer = StreamingIndexer(spark, stream_dir, str(tmp_path / "stg"), cfg)
+    waves = [
+        [dict(r, repo=f"a{w}-" + r["repo"]) for r in rows[lo:lo + 32]]
+        for w, lo in enumerate((0, 32))
+    ]
+    for wave in waves:
+        spark.createDataFrame(wave, schema=schema).select(*cols).write.mode(
+            "append"
+        ).parquet(src)
+        indexer.start(
+            spark.readStream.schema(schema).parquet(src), available_now=True
+        )
+        assert indexer.advance()["indexed"] == 32
+        _assert_driver_lookup_matches_spark(
+            spark, stream_dir, cfg, _vocab(wave)
+        )
+
+    # a missing term_stats root (e.g. mid-swap) raises; it must never
+    # price every term at df 0
+    store = IndexStore(spark, stream_dir, cfg)
+    store.load_meta_into_config()
+    moved = store.term_stats_path + ".retired"
+    os.rename(store.term_stats_path, moved)
+    try:
+        with pytest.raises(FileNotFoundError):
+            store.term_stats_for(vocab[:5])
+    finally:
+        os.rename(moved, store.term_stats_path)
+    assert store.term_stats_for(vocab[:5])
+
+
+def test_engine_resolves_docs_table_once(setup, monkeypatch):
+    """Doc info, filters and facets read the docs frame the engine
+    resolved at open, so none of them pays the docs table's
+    schema-inference job again."""
+    from pyspark.sql import functions as F
+
+    engine, _oracle = setup
+
+    def _reread():
+        raise AssertionError("docs table re-read after engine open")
+
+    monkeypatch.setattr(engine.store, "read_docs", _reread)
+    info = engine.with_doc_info(engine.search("zqmerge", SearchMode.AND))
+    assert info.collect()
+    engine.search(
+        "zqmerge", SearchMode.OR, doc_filter=F.col("lang") == "python"
+    ).collect()
+    assert engine.facet_counts("zqmerge", SearchMode.OR).collect()
