@@ -198,18 +198,9 @@ def run_bench(cores: int, sf_dir: str, replicas: int, repeats: int) -> dict:
         # metric is build throughput, not the operator zoo.
         if os.environ.get("SPARK_GRAFT_EXTRAS", "1") != "0":
             extra = _extra_ops(spark, engine, sf_dir, SearchMode)
-            try:
-                extra["pipeline_scale"] = _pipeline_scale_bench(spark, sf_dir)
-            except Exception as e:  # pragma: no cover - keep bench robust
-                extra["pipeline_scale_error"] = repr(e)
-            try:
-                extra["compaction"] = _compaction_bench(spark, sf_dir)
-            except Exception as e:  # pragma: no cover - keep bench robust
-                extra["compaction_error"] = repr(e)
-            try:
-                extra["upsert"] = _upsert_bench(spark, sf_dir)
-            except Exception as e:  # pragma: no cover - keep bench robust
-                extra["upsert_error"] = repr(e)
+            extra["pipeline_scale"] = _pipeline_scale_bench(spark, sf_dir)
+            extra["compaction"] = _compaction_bench(spark, sf_dir)
+            extra["upsert"] = _upsert_bench(spark, sf_dir)
         else:
             extra = {}
     finally:
@@ -257,66 +248,55 @@ def _extra_ops(spark, engine, sf_dir: str, SearchMode) -> dict:
 
     from pyspark.sql import functions as F
 
+    from search_engine_spark.pipeline.similarity import LshIndex
+    from search_engine_spark.query.spelling import (
+        SpellingCorrector,
+        build_trigram_table,
+    )
+
     out: dict = {}
-    try:
-        emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-        qvec = [
-            float(v)
-            for v in emb.where(F.col("vec_id") == 0).head()["embedding"]
-        ]
-        t = time.time()
-        engine.semantic_search(
-            "dup small", qvec, embeddings=emb, num_semantic_candidates=100
-        ).collect()
-        out["semantic_query_sec"] = round(time.time() - t, 4)
+    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    qvec = [
+        float(v)
+        for v in emb.where(F.col("vec_id") == 0).head()["embedding"]
+    ]
+    t = time.time()
+    engine.semantic_search(
+        "dup small", qvec, embeddings=emb, num_semantic_candidates=100
+    ).collect()
+    out["semantic_query_sec"] = round(time.time() - t, 4)
 
-        t = time.time()
-        engine.search_reranked("dup small", SearchMode.OR).collect()
-        out["rerank_query_sec"] = round(time.time() - t, 4)
+    t = time.time()
+    engine.search_reranked("dup small", SearchMode.OR).collect()
+    out["rerank_query_sec"] = round(time.time() - t, 4)
 
-        from search_engine_spark.pipeline.similarity import LshIndex
+    d = _tf.mkdtemp(prefix="se_bench_ann_")
+    try:
+        t = time.time()
+        idx = LshIndex.build(emb, d)
+        out["ann_lsh_build_sec"] = round(time.time() - t, 4)
+        t = time.time()
+        idx.topk(qvec, k=10).collect()
+        out["ann_lsh_query_sec"] = round(time.time() - t, 4)
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
-        d = _tf.mkdtemp(prefix="se_bench_ann_")
-        try:
-            t = time.time()
-            idx = LshIndex.build(emb, d)
-            out["ann_lsh_build_sec"] = round(time.time() - t, 4)
-            t = time.time()
-            idx.topk(qvec, k=10).collect()
-            out["ann_lsh_query_sec"] = round(time.time() - t, 4)
-        finally:
-            shutil.rmtree(d, ignore_errors=True)
-    except Exception as e:  # pragma: no cover - keep bench robust
-        out["extra_ops_error"] = repr(e)
-    try:
-        # spelling path (Q23): vocabulary trigram table build + batched
-        # OOV correction, cold (first probe pays the table scan + cache)
-        # vs warm (cached trigram table, one job per batch)
-        from search_engine_spark.query.spelling import (
-            SpellingCorrector,
-            build_trigram_table,
-        )
+    # spelling path (Q23): vocabulary trigram table build + batched
+    # OOV correction, cold (first probe pays the table scan + cache)
+    # vs warm (cached trigram table, one job per batch)
+    t = time.time()
+    build_trigram_table(engine.store)
+    out["trigram_build_sec"] = round(time.time() - t, 4)
+    sc = SpellingCorrector(spark, engine.store)
+    t = time.time()
+    sc.correct_many(["dupp", "stram", "qurey", "windoq"])
+    out["spelling_batch4_cold_sec"] = round(time.time() - t, 4)
+    t = time.time()
+    sc.correct_many(["vectr", "joim", "mrege"])
+    out["spelling_batch3_warm_sec"] = round(time.time() - t, 4)
 
-        t = time.time()
-        build_trigram_table(engine.store)
-        out["trigram_build_sec"] = round(time.time() - t, 4)
-        sc = SpellingCorrector(spark, engine.store)
-        t = time.time()
-        sc.correct_many(["dupp", "stram", "qurey", "windoq"])
-        out["spelling_batch4_cold_sec"] = round(time.time() - t, 4)
-        t = time.time()
-        sc.correct_many(["vectr", "joim", "mrege"])
-        out["spelling_batch3_warm_sec"] = round(time.time() - t, 4)
-    except Exception as e:  # pragma: no cover
-        out["spelling_error"] = repr(e)
-    try:
-        out["rerank_training"] = _training_metrics(spark, sf_dir)
-    except Exception as e:  # pragma: no cover
-        out["rerank_training_error"] = repr(e)
-    try:
-        out["serve"] = _serve_bench(spark, str(engine.store.dir), engine.config)
-    except Exception as e:  # pragma: no cover
-        out["serve_error"] = repr(e)
+    out["rerank_training"] = _training_metrics(spark, sf_dir)
+    out["serve"] = _serve_bench(spark, str(engine.store.dir), engine.config)
     return out
 
 
@@ -383,12 +363,11 @@ def _serve_bench(spark, index_dir: str, cfg) -> dict:
                 th.join()
             wall = time.time() - t
             if errs:
-                out[f"concurrent_{clients}_error"] = errs[0]
-            else:
-                out[f"concurrent_{clients}_rps"] = round(
-                    clients * per_client / wall, 2
-                )
-                out[f"concurrent_{clients}_wall_sec"] = round(wall, 3)
+                raise RuntimeError(f"{clients} concurrent clients: {errs[0]}")
+            out[f"concurrent_{clients}_rps"] = round(
+                clients * per_client / wall, 2
+            )
+            out[f"concurrent_{clients}_wall_sec"] = round(wall, 3)
 
         # the runs above repeat 4 queries, so the serving result cache
         # (snapshot-scoped, serve.py) absorbs most of them — the realistic
@@ -425,10 +404,9 @@ def _serve_bench(spark, index_dir: str, cfg) -> dict:
             th.join()
         wall = time.time() - t
         if errs:
-            out["concurrent_16_distinct_error"] = errs[0]
-        else:
-            out["concurrent_16_distinct_rps"] = round(48 / wall, 2)
-            out["concurrent_16_distinct_wall_sec"] = round(wall, 3)
+            raise RuntimeError(f"16 distinct-query clients: {errs[0]}")
+        out["concurrent_16_distinct_rps"] = round(48 / wall, 2)
+        out["concurrent_16_distinct_wall_sec"] = round(wall, 3)
     finally:
         srv.shutdown()
         srv.server_close()

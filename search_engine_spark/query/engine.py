@@ -2,10 +2,13 @@
 
 ``SearchEngine`` is the query-side public API (reference counterpart:
 ``InvertedIndex.search``, ``/root/reference/search_engine/
-inverted_index.py:1845-1866``).  One query (or a batch of queries — they
-share the scan) executes as:
+inverted_index.py:1845-1866``).  Every query takes one entry path:
+``_compile_many`` (a single query is a batch of one) → ``execute``, whose
+postings scan ``_cogroup`` is shared with facets and rerank.  One query
+(or a batch of queries — they share the scan) executes as:
 
-``driver: tokenize → term-stats lookup (pyarrow, no Spark job) → compile``
+``driver: tokenize → spelling (one job per batch, only on OOV tokens)``
+``        → term-stats lookup (pyarrow, no Spark job) → compile``
 ``cluster: pruned postings scan  ⟂cogroup⟂  doclens scan``
 ``        → applyInPandas(chunk kernel: decode + set algebra + BM25 +``
 ``          block-max WAND + chunk top-k)``
@@ -66,6 +69,11 @@ _BLK_COLS = [
 ]
 
 
+def _pos_cols(live: list[CompiledQuery]) -> list[str]:
+    """Position columns, read only when some plan needs them."""
+    return _POS_COLS if any(p.needs_positions for p in live) else []
+
+
 class SearchEngine:
     def __init__(
         self,
@@ -108,6 +116,13 @@ class SearchEngine:
         # the index itself — a mismatch would empty every pruned lookup
         self.config = self.store.load_meta_into_config()
         self.stats = self.store.read_stats()
+        self._kernel_stats = {
+            "num_docs": int(self.stats["num_docs"]),
+            "avg_doc_len": float(self.stats["avg_doc_len"]),
+            "avg_title_len": float(self.stats["avg_title_len"]),
+            "max_doc_len": int(self.stats["max_doc_len"]),
+            "max_title_len": int(self.stats["max_title_len"]),
+        }
         self._tokenize = get_tokenizer(self.config.tokenizer)
         # resolve committed batches once; re-open an engine to see new data.
         # postings are deliberately NOT cached: a blanket cache would turn
@@ -136,11 +151,7 @@ class SearchEngine:
         self._deleted_by_chunk = None
         if tomb is not None:
             by_chunk = (
-                tomb.select(
-                    F.floor(F.col("doc_id") / self.config.chunk_docs)
-                    .cast("long").alias("chunk_id"),
-                    "doc_id",
-                )
+                tomb.select(self._chunk_of().alias("chunk_id"), "doc_id")
                 .groupBy("chunk_id")
                 .agg(
                     F.sort_array(F.collect_list("doc_id")).alias("deleted_ids")
@@ -152,56 +163,86 @@ class SearchEngine:
 
     # ----- spelling correction (reference Q23) -----
 
-    def _correct_tokens(self, tokens: list[str], mode: SearchMode) -> list[str]:
+    def _correct_tokens(
+        self, token_lists: list[list[str]], modes: list[SearchMode]
+    ) -> list[list[str]]:
         """Replace out-of-vocabulary term tokens via the trigram funnel —
         the reference corrects inside ``get_docs`` on a df==0 miss
         (inverted_index.py:1107-1115); phrase fetches never correct
-        (:1152-1184)."""
-        import os
-
+        (:1152-1184).  Every OOV token of the whole batch rides ONE
+        ``correct_many`` job, not a job per query or token."""
         from search_engine_spark.plans.parser import PRECEDENCE
         from search_engine_spark.query.spelling import SpellingCorrector
 
-        if mode == SearchMode.PHRASE:
-            return tokens
         if self._corrector is None:
             if not os.path.isdir(str(self.store.dir / "trigrams")):
-                return tokens
+                return token_lists
             self._corrector = SpellingCorrector(self.spark, self.store)
-        dfs = self.store.term_stats_for(tokens)
-        # first pass marks the OOV positions; every OOV token of the
-        # query then rides ONE correct_many job (not a job per token)
-        oov: list[str] = []
-        in_phrase = False
-        for t in tokens:
-            if t == '"':
-                in_phrase = not in_phrase
-            elif not (
-                in_phrase
-                or t in ("(", ")")
-                or t.upper() in PRECEDENCE
-                or dfs.get(t, 0) > 0
-            ):
-                oov.append(t)
-        fixes = self._corrector.correct_many(oov) if oov else {}
-        out = []
-        in_phrase = False
-        for t in tokens:
-            if t == '"':
-                in_phrase = not in_phrase
-                out.append(t)
-            elif (
-                in_phrase
-                or t in ("(", ")")
-                or t.upper() in PRECEDENCE
-                or dfs.get(t, 0) > 0
-            ):
-                out.append(t)
-            else:
-                out.append(fixes.get(t, t))
+        dfs = self.store.term_stats_for(
+            [t for toks in token_lists for t in toks]
+        )
+        oov: list[tuple[int, int]] = []  # (query, token) positions
+        for qi, (toks, mode) in enumerate(zip(token_lists, modes)):
+            if mode == SearchMode.PHRASE:
+                continue
+            in_phrase = False
+            for ti, t in enumerate(toks):
+                if t == '"':
+                    in_phrase = not in_phrase
+                elif not (
+                    in_phrase
+                    or t in ("(", ")")
+                    or t.upper() in PRECEDENCE
+                    or dfs.get(t, 0) > 0
+                ):
+                    oov.append((qi, ti))
+        if not oov:
+            return token_lists
+        fixes = self._corrector.correct_many(
+            [token_lists[qi][ti] for qi, ti in oov]
+        )
+        out = [list(toks) for toks in token_lists]
+        for qi, ti in oov:
+            out[qi][ti] = fixes[out[qi][ti]]
         return out
 
     # ----- planning -----
+
+    def _analyze(
+        self, queries: list[tuple[str, SearchMode]]
+    ) -> tuple[list[list[str]], dict[str, int]]:
+        """Tokenize every query, correct OOV tokens (when spelling is on)
+        and look up df once for the whole batch -> (token lists, dfs)."""
+        token_lists = [self._tokenize(q) for q, _mode in queries]
+        if self.config.enable_spelling:
+            token_lists = self._correct_tokens(
+                token_lists, [mode for _q, mode in queries]
+            )
+        # candidate terms for the stats lookup: every non-operator token
+        # (operators that survive as terms just come back df=0, harmless)
+        dfs = self.store.term_stats_for(
+            [t for toks in token_lists for t in toks]
+        )
+        return token_lists, dfs
+
+    def _compile_many(
+        self,
+        queries: list[tuple[str, SearchMode]],
+        num_candidates: int | None = None,
+        num_return: int | None = None,
+        first_qid: int = 0,
+    ) -> list[CompiledQuery]:
+        """The one driver front end: plans for ``queries`` with qid =
+        ``first_qid`` + position."""
+        token_lists, dfs = self._analyze(queries)
+        return [
+            compile_query(
+                toks, mode, dfs, self._kernel_stats["num_docs"], self.config,
+                qid=first_qid + i, num_candidates=num_candidates,
+                num_return=num_return,
+            )
+            for i, (toks, (_q, mode)) in enumerate(zip(token_lists, queries))
+        ]
 
     def compile(
         self,
@@ -211,22 +252,9 @@ class SearchEngine:
         num_candidates: int | None = None,
         num_return: int | None = None,
     ) -> CompiledQuery:
-        tokens = self._tokenize(query)
-        if self.config.enable_spelling:
-            tokens = self._correct_tokens(tokens, mode)
-        # candidate terms for the stats lookup: every non-operator token
-        # (operators that survive as terms just come back df=0, harmless)
-        dfs = self.store.term_stats_for(tokens)
-        return compile_query(
-            tokens,
-            mode,
-            dfs,
-            int(self.stats["num_docs"]),
-            self.config,
-            qid=qid,
-            num_candidates=num_candidates,
-            num_return=num_return,
-        )
+        return self._compile_many(
+            [(query, mode)], num_candidates, num_return, first_qid=qid
+        )[0]
 
     # ----- execution -----
 
@@ -284,61 +312,28 @@ class SearchEngine:
         under filters and deletions: the kernel drops non-surviving
         candidates per segment before scoring, and the unfiltered block
         maxima remain valid upper bounds (see wand.py)."""
-        live = [p for p in plans if p.tree[0] != EMPTY]
+        live = self._live(plans)
         if not live:
             return self._empty_ranked()
-
-        fetch_terms = sorted({t for p in live for t in p.fetch_terms})
-        need_pos = any(p.needs_positions for p in live)
-        need_blk = use_wand and any(p.wand_eligible for p in live)
-        scan_all = any(p.scan_all_chunks for p in live)
-        if not fetch_terms and not scan_all:
-            return self._empty_ranked()
-
-        cols = list(_BASE_COLS)
-        if need_pos:
-            cols += _POS_COLS
-        if need_blk:
+        cols = _BASE_COLS + _pos_cols(live)
+        if use_wand and any(p.wand_eligible for p in live):
             cols += _BLK_COLS
-        buckets = sorted(
-            {term_bucket(t, self.config.n_term_buckets) for t in fetch_terms}
-        )
-        postings = self._postings.where(
-            F.col("bucket").isin(buckets) & F.col("term").isin(fetch_terms)
-        ).select(*cols)
-
-        doclens = self._doclens
-        if doc_filter is not None:
-            doclens = doclens.join(
-                self._allowed_by_chunk(doc_filter), "chunk_id", "inner"
-            )
-        if self._deleted_by_chunk is not None:
-            # left join: chunks without deletions keep a null cell (the
-            # kernel skips them at zero cost) and keep their WAND path
-            doclens = doclens.join(
-                self._deleted_by_chunk, "chunk_id", "left"
-            )
-
         kernel = make_query_kernel(
             live,
-            {
-                "num_docs": int(self.stats["num_docs"]),
-                "avg_doc_len": float(self.stats["avg_doc_len"]),
-                "avg_title_len": float(self.stats["avg_title_len"]),
-            },
+            self._kernel_stats,
             self.config.k1,
             self.config.b,
             self.config.title_weight,
             use_wand=use_wand,
             wand_accumulators=self._wand_acc,
         )
-        per_chunk = (
-            postings.groupby("chunk_id")
-            .cogroup(doclens.groupby("chunk_id"))
-            .applyInPandas(kernel, RESULT_SCHEMA)
+        per_chunk = self._cogroup(
+            live, cols, self._doclens_for(doc_filter, self._doclens),
+            kernel, RESULT_SCHEMA,
         )
-        n_return = {p.qid: p.num_return for p in live}
         if len(live) == 1:
+            # one plan: a global TakeOrderedAndProject top-k runs 3 Spark
+            # jobs per search, the per-qid window 4 (and a higher p50)
             p = live[0]
             return (
                 per_chunk.orderBy(F.desc("score"), F.asc("doc_id"))
@@ -352,7 +347,55 @@ class SearchEngine:
             )
         w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
         ranked = per_chunk.withColumn("rank", F.row_number().over(w))
-        return _apply_per_qid_limit(ranked, n_return)
+        return _apply_per_qid_limit(
+            ranked, {p.qid: p.num_return for p in live}
+        )
+
+    @staticmethod
+    def _live(plans: list[CompiledQuery]) -> list[CompiledQuery]:
+        """The plans that can match anything; [] when none can (every
+        plan EMPTY, or no plan fetches a term or scans every chunk)."""
+        live = [p for p in plans if p.tree[0] != EMPTY]
+        if any(p.fetch_terms or p.scan_all_chunks for p in live):
+            return live
+        return []
+
+    def _chunk_of(self):
+        """The chunk id of the ``doc_id`` column."""
+        return F.floor(F.col("doc_id") / self.config.chunk_docs).cast("long")
+
+    def _cogroup(
+        self, live: list[CompiledQuery], cols: list[str], doclens: DataFrame,
+        kernel, schema: str,
+    ) -> DataFrame:
+        """The one postings scan: ``cols`` of the live plans' terms,
+        pruned to their hash-bucket partitions with ``term IN`` pushed to
+        parquet, cogrouped per chunk with ``doclens`` into ``kernel``."""
+        fetch_terms = sorted({t for p in live for t in p.fetch_terms})
+        buckets = sorted(
+            {term_bucket(t, self.config.n_term_buckets) for t in fetch_terms}
+        )
+        postings = self._postings.where(
+            F.col("bucket").isin(buckets) & F.col("term").isin(fetch_terms)
+        ).select(*cols)
+        return (
+            postings.groupby("chunk_id")
+            .cogroup(doclens.groupby("chunk_id"))
+            .applyInPandas(kernel, schema)
+        )
+
+    def _doclens_for(self, doc_filter, base: DataFrame) -> DataFrame:
+        """The cogroup's doclens side: ``base`` limited to chunks with a
+        doc passing ``doc_filter``, with tombstoned ids attached."""
+        if doc_filter is not None:
+            base = base.join(
+                self._allowed_by_chunk(doc_filter), "chunk_id", "inner"
+            )
+        if self._deleted_by_chunk is not None:
+            # left join: chunks without deletions keep a null cell (the
+            # kernel skips them at zero cost) and keep their WAND path
+            base = base.join(self._deleted_by_chunk, "chunk_id", "left")
+        return base
 
     def _allowed_by_chunk(self, doc_filter) -> DataFrame:
         """Filter survivors as one sorted id array per chunk.  The inner
@@ -363,12 +406,7 @@ class SearchEngine:
         return (
             self.docs
             .where(doc_filter)
-            .select(
-                F.floor(
-                    F.col("doc_id") / self.config.chunk_docs
-                ).cast("long").alias("chunk_id"),
-                "doc_id",
-            )
+            .select(self._chunk_of().alias("chunk_id"), "doc_id")
             .groupBy("chunk_id")
             .agg(F.sort_array(F.collect_list("doc_id")).alias("allowed_ids"))
         )
@@ -395,34 +433,15 @@ class SearchEngine:
             make_facet_kernel,
         )
 
-        live = [p for p in plans if p.tree[0] != EMPTY]
+        live = self._live(plans)
         if not live:
             return self.spark.createDataFrame(
                 [], "qid int, value string, n_docs long"
             )
-        fetch_terms = sorted({t for p in live for t in p.fetch_terms})
-        need_pos = any(p.needs_positions for p in live)
-        scan_all = any(p.scan_all_chunks for p in live)
-        if not fetch_terms and not scan_all:
-            return self.spark.createDataFrame(
-                [], "qid int, value string, n_docs long"
-            )
-        cols = list(_BASE_COLS)
-        if need_pos:
-            cols += _POS_COLS
-        buckets = sorted(
-            {term_bucket(t, self.config.n_term_buckets) for t in fetch_terms}
-        )
-        postings = self._postings.where(
-            F.col("bucket").isin(buckets) & F.col("term").isin(fetch_terms)
-        ).select(*cols)
-
         facets = (
             self.docs
             .select(
-                F.floor(
-                    F.col("doc_id") / self.config.chunk_docs
-                ).cast("long").alias("chunk_id"),
+                self._chunk_of().alias("chunk_id"),
                 "doc_id",
                 F.col(by).cast("string").alias("_fv"),
             )
@@ -438,19 +457,12 @@ class SearchEngine:
                 F.col("_fa._fv").alias("facet_vals"),
             )
         )
-        doclens = self._doclens.join(facets, "chunk_id", "inner")
-        if doc_filter is not None:
-            doclens = doclens.join(
-                self._allowed_by_chunk(doc_filter), "chunk_id", "inner"
-            )
-        if self._deleted_by_chunk is not None:
-            doclens = doclens.join(
-                self._deleted_by_chunk, "chunk_id", "left"
-            )
-        per_chunk = (
-            postings.groupby("chunk_id")
-            .cogroup(doclens.groupby("chunk_id"))
-            .applyInPandas(make_facet_kernel(live), FACET_SCHEMA)
+        doclens = self._doclens_for(
+            doc_filter, self._doclens.join(facets, "chunk_id", "inner")
+        )
+        per_chunk = self._cogroup(
+            live, _BASE_COLS + _pos_cols(live), doclens,
+            make_facet_kernel(live), FACET_SCHEMA,
         )
         return per_chunk.groupBy("qid", "value").agg(
             F.sum("n").alias("n_docs")
@@ -489,27 +501,10 @@ class SearchEngine:
         use_wand: bool = True,
     ) -> DataFrame:
         """Many queries in one scan+job; qid = position in ``queries``."""
-        plans = []
-        # one stats lookup for all queries' tokens
-        all_tokens: list[str] = []
-        tokenized = []
-        for q, mode in queries:
-            toks = self._tokenize(q)
-            if self.config.enable_spelling:
-                # same OOV-correction funnel as search()/compile() — the two
-                # entry points must agree on the final token stream
-                toks = self._correct_tokens(toks, mode)
-            tokenized.append(toks)
-            all_tokens.extend(toks)
-        dfs = self.store.term_stats_for(all_tokens)
-        for qid, ((_q, mode), toks) in enumerate(zip(queries, tokenized)):
-            plans.append(
-                compile_query(
-                    toks, mode, dfs, int(self.stats["num_docs"]),
-                    self.config, qid=qid, num_return=num_return,
-                )
-            )
-        return self.execute(plans, use_wand=use_wand)
+        return self.execute(
+            self._compile_many(queries, num_return=num_return),
+            use_wand=use_wand,
+        )
 
     def search_batch_chunked(
         self,
@@ -536,7 +531,6 @@ class SearchEngine:
         driver memory stay O(chunk) no matter how many queries; without
         it the slices are unioned lazily (fine up to a few hundred
         slices)."""
-        import os
         from functools import reduce
 
         if output_path is not None and os.path.exists(output_path):
@@ -546,13 +540,15 @@ class SearchEngine:
                 f"output_path {output_path!r} already exists; point each "
                 f"run at a fresh directory"
             )
-        if len(queries) <= chunk_size and output_path is None:
-            return self.search_batch(queries, num_return, use_wand)
+        if not queries:
+            return self._empty_ranked()
         outs = []
         for lo in range(0, len(queries), chunk_size):
-            ranked = self.search_batch(
-                queries[lo : lo + chunk_size], num_return, use_wand
-            ).withColumn("qid", (F.col("qid") + F.lit(lo)).cast("int"))
+            plans = self._compile_many(
+                queries[lo : lo + chunk_size], num_return=num_return,
+                first_qid=lo,
+            )
+            ranked = self.execute(plans, use_wand=use_wand)
             if output_path is not None:
                 ranked.write.mode("append").parquet(output_path)
             else:
@@ -581,41 +577,23 @@ class SearchEngine:
 
         model = model or RankingModel.seeded()
         cand_by_chunk = (
-            candidates.withColumn(
-                "chunk_id",
-                F.floor(F.col("doc_id") / self.config.chunk_docs).cast("long"),
-            )
+            candidates.withColumn("chunk_id", self._chunk_of())
             .groupBy("chunk_id")
             .agg(F.collect_list(F.struct("qid", "doc_id")).alias("cands"))
         )
-        fetch_terms = sorted({t for p in live for t in p.fetch_terms})
-        buckets = sorted(
-            {term_bucket(t, self.config.n_term_buckets) for t in fetch_terms}
-        )
-        postings = self._postings.where(
-            F.col("bucket").isin(buckets) & F.col("term").isin(fetch_terms)
-        ).select(*(_BASE_COLS + _POS_COLS))
         doclens = self._doclens.join(
             F.broadcast(cand_by_chunk), "chunk_id", "inner"
         )
         kernel = make_features_kernel(
             live,
             model.w,
-            {
-                "num_docs": int(self.stats["num_docs"]),
-                "avg_doc_len": float(self.stats["avg_doc_len"]),
-                "avg_title_len": float(self.stats["avg_title_len"]),
-                "max_doc_len": int(self.stats["max_doc_len"]),
-                "max_title_len": int(self.stats["max_title_len"]),
-            },
+            self._kernel_stats,
             self.config.k1,
             self.config.b,
             self.config.title_weight,
         )
-        return (
-            postings.groupby("chunk_id")
-            .cogroup(doclens.groupby("chunk_id"))
-            .applyInPandas(kernel, FEATURES_SCHEMA)
+        return self._cogroup(
+            live, _BASE_COLS + _POS_COLS, doclens, kernel, FEATURES_SCHEMA
         )
 
     def rerank(
@@ -628,7 +606,7 @@ class SearchEngine:
         candidate-focused kernel pass with positions) -> MLP score ->
         top-``num_return`` (reference Q21/Q22, inverted_index.py:1778-1832).
         """
-        live = [p for p in plans if p.tree[0] != EMPTY]
+        live = self._live(plans)
         if not live:
             return self._empty_ranked()
         # stage 1: BM25 candidates (top num_candidates per query) — kept
@@ -707,11 +685,8 @@ class SearchEngine:
         # spelling funnel still applies when enabled: the reference's
         # get_docs corrects misses even with enable_threshold=False
         # (inverted_index.py:1097-1115)
-        tokens = self._tokenize(query)
-        if self.config.enable_spelling:
-            tokens = self._correct_tokens(tokens, SearchMode.QUERY_EVALUATOR)
-        dfs = self.store.term_stats_for(tokens)
-        num_docs = int(self.stats["num_docs"])
+        [tokens], dfs = self._analyze([(query, SearchMode.QUERY_EVALUATOR)])
+        num_docs = self._kernel_stats["num_docs"]
         plan = CompiledQuery(
             qid=0,
             tree=(EMPTY,),

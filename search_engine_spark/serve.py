@@ -33,7 +33,9 @@ idle (a lone request is a batch of one), full coalescing under load
 Per-request results are identical to the solo path: ``search_batch``
 funnels through the same compile/execute pipeline with qid = batch
 position, and a request asking for a smaller k than its batch-mates
-takes the rank <= k prefix (top-k is rank-stable in k).  Rerank
+takes the rank <= k prefix (top-k is rank-stable in k).  A failed wave
+(e.g. one malformed query) retries each of its requests as a wave of
+one through the same path, so only the offender fails.  Rerank
 requests keep the solo path (the MLP stage is per-query).
 
 Two serving-only fast paths on top of the batcher (results stay
@@ -58,8 +60,9 @@ bit-identical to ``SearchEngine.search`` + ``with_doc_info``):
   requires a new ``SearchService`` (exactly as it already requires a new
   engine), which starts cold.  Entries store the full rank-ordered row list at
   the k they were computed with; smaller-k requests take the prefix,
-  larger-k requests miss and recompute.  Bounded LRU
-  (``cache_size`` entries, 0 disables).
+  larger-k requests miss and recompute.  The result, doc-info and
+  snippet caches are each one bounded ``_LRU`` (result cache:
+  ``cache_size`` entries, 0 disables).
 """
 
 from __future__ import annotations
@@ -85,13 +88,45 @@ from search_engine_spark.query.engine import SearchEngine
 # the collected metadata stops being "tiny") and uses the distributed
 # with_doc_info join instead.  64-query batches at k=100 stay well under.
 _MAX_DRIVER_IDS = 8192
+# doc-info and snippet cache entries (one per hit doc)
+_DOC_CACHE_SIZE = 1 << 16
+
+
+class _LRU:
+    """Thread-safe map bounded to ``size`` entries, evicting the least
+    recently read or written; size 0 stores nothing."""
+
+    def __init__(self, size: int):
+        self._size = size
+        self._d: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+
+    def get_many(self, keys) -> dict:
+        """The cached subset of ``keys``; each hit becomes most recent."""
+        with self._lock:
+            out = {}
+            for k in keys:
+                if k in self._d:
+                    self._d.move_to_end(k)
+                    out[k] = self._d[k]
+            return out
+
+    def put_many(self, items: dict) -> None:
+        if not self._size:
+            return
+        with self._lock:
+            for k, v in items.items():
+                self._d[k] = v
+                self._d.move_to_end(k)
+            while len(self._d) > self._size:
+                self._d.popitem(last=False)
 
 
 class _MicroBatcher:
     """Coalesce concurrent (query, mode, k) requests into one
-    ``search_batch`` job per worker wake-up.  A failed batch falls back
-    to per-request solo execution so one malformed query can't poison
-    its batch-mates' responses."""
+    ``search_batch`` job per worker wake-up.  A failed wave retries each
+    request as a wave of one so one malformed query can't poison its
+    batch-mates' responses."""
 
     def __init__(
         self,
@@ -105,16 +140,13 @@ class _MicroBatcher:
         self._max_batch = max_batch
         # (query, mode) -> (k_computed, rank-ordered rows); sound for the
         # service lifetime because the engine's index view is pinned at
-        # open — see the module docstring.  LRU-bounded; 0 disables.
-        self._cache_size = cache_size
-        self._cache: OrderedDict[tuple, tuple[int, list]] = OrderedDict()
-        self._cache_lock = threading.Lock()
+        # open — see the module docstring.  0 disables.
+        self._results = _LRU(cache_size)
         # doc metadata + snippet caches (immutable for the engine's
         # pinned snapshot, same argument as the result cache): distinct
         # queries share hit docs, so later waves fetch only unseen ids
-        self._info_cache: OrderedDict = OrderedDict()
-        self._snip_cache: OrderedDict = OrderedDict()
-        self._info_lock = threading.Lock()
+        self._info = _LRU(_DOC_CACHE_SIZE)
+        self._snips = _LRU(_DOC_CACHE_SIZE)
         # a few workers, not one: a request that arrives just after a
         # batch departs would otherwise serialize behind that batch's
         # whole job.  2-3 overlapping batch jobs keep the scheduler fed
@@ -133,28 +165,22 @@ class _MicroBatcher:
         self._thread: threading.Thread | None = None
 
     def _cache_get(self, query: str, mode: SearchMode, k: int) -> list | None:
-        if not self._cache_size:
-            return None
-        with self._cache_lock:
-            ent = self._cache.get((query, mode.name))
-            if ent is None or ent[0] < k:
-                return None  # miss, or cached at a smaller k than asked
-            self._cache.move_to_end((query, mode.name))
-            return [r for r in ent[1] if r.rank <= k]
+        key = (query, mode.name)
+        ent = self._results.get_many([key]).get(key)
+        if ent is None or ent[0] < k:
+            return None  # miss, or cached at a smaller k than asked
+        return [r for r in ent[1] if r.rank <= k]
 
     def _cache_put(
         self, query: str, mode: SearchMode, k: int, rows: list
     ) -> None:
-        if not self._cache_size:
-            return
-        with self._cache_lock:
-            old = self._cache.get((query, mode.name))
-            if old is not None and old[0] >= k:
-                return  # keep the deeper result set
-            self._cache[(query, mode.name)] = (k, rows)
-            self._cache.move_to_end((query, mode.name))
-            while len(self._cache) > self._cache_size:
-                self._cache.popitem(last=False)
+        key = (query, mode.name)
+        old = self._results.get_many([key]).get(key)
+        if old is not None and old[0] >= k:
+            return  # keep the deeper result set
+        # a racing put may still land a shallower entry: larger-k
+        # requests then miss and recompute, so results stay exact
+        self._results.put_many({key: (k, rows)})
 
     def submit(self, query: str, mode: SearchMode, k: int) -> list:
         """Block until this request's result rows are ready."""
@@ -193,37 +219,33 @@ class _MicroBatcher:
             self._run(batch)
 
     def _run(self, batch: list) -> None:
-        eng = self._service.engine
         try:
-            kmax = max(k for _q2, _m, k, _f in batch)
-            # concurrent clients often ask the same thing — compile and
-            # score each DISTINCT (query, mode) once, fan results back out
-            uniq: dict[tuple, int] = {}
-            for q, m, _k, _f in batch:
-                uniq.setdefault((q, m), len(uniq))
-            ranked = eng.search_batch(list(uniq), num_return=kmax)
-            ranked_rows = ranked.collect()
-            by_key = self._attach_doc_info(ranked, ranked_rows, uniq)
-            for (q, m), rows in by_key.items():
-                self._cache_put(q, m, kmax, rows)
-            for q, m, k, fut in batch:
-                fut.set_result(
-                    [r for r in by_key[(q, m)] if r.rank <= k]
-                )
+            self._run_wave(batch)
         except Exception:
-            # isolate the failure: re-run each request solo and let the
-            # offender (e.g. a parse error) fail alone
-            for q, m, k, fut in batch:
+            # isolate the failure: retry each request as a wave of one
+            # and let the offender (e.g. a parse error) fail alone
+            for req in batch:
                 try:
-                    rows = eng.with_doc_info(
-                        eng.search(q, m, num_return=k), self._service.corpus
-                    ).collect()
-                    fut.set_result(rows)
-                    self._cache_put(
-                        q, m, k, sorted(rows, key=lambda r: r.rank)
-                    )
+                    self._run_wave([req])
                 except Exception as exc:
-                    fut.set_exception(exc)
+                    req[3].set_exception(exc)
+
+    def _run_wave(self, batch: list) -> None:
+        """One ``search_batch`` job for the wave, doc info attached, the
+        result cache filled, every request's future resolved."""
+        eng = self._service.engine
+        kmax = max(k for _q, _m, k, _f in batch)
+        # concurrent clients often ask the same thing — compile and
+        # score each DISTINCT (query, mode) once, fan results back out
+        uniq: dict[tuple, int] = {}
+        for q, m, _k, _f in batch:
+            uniq.setdefault((q, m), len(uniq))
+        ranked = eng.search_batch(list(uniq), num_return=kmax)
+        by_key = self._attach_doc_info(ranked, ranked.collect(), uniq)
+        for (q, m), rows in by_key.items():
+            self._cache_put(q, m, kmax, rows)
+        for q, m, k, fut in batch:
+            fut.set_result([r for r in by_key[(q, m)] if r.rank <= k])
 
     def _attach_doc_info(
         self, ranked, ranked_rows: list, uniq: dict
@@ -249,10 +271,7 @@ class _MicroBatcher:
                 qm: sorted(by_qid[qid], key=lambda r: r.rank)
                 for qm, qid in uniq.items()
             }
-        with self._info_lock:
-            info = {
-                i: self._info_cache[i] for i in ids if i in self._info_cache
-            }
+        info = self._info.get_many(ids)
         missing = [i for i in ids if i not in info]
         if missing:
             docs = eng.docs.select("doc_id", "repo", "path", "commit", "lang")
@@ -261,19 +280,11 @@ class _MicroBatcher:
                 for r in docs.where(F.col("doc_id").isin(missing)).collect()
             }
             info.update(fetched)
-            with self._info_lock:
-                self._info_cache.update(fetched)
-                while len(self._info_cache) > (1 << 16):
-                    self._info_cache.popitem(last=False)
+            self._info.put_many(fetched)
         snip: dict | None = None
         if corpus is not None:
             keys = {(i.repo, i.path, i.commit) for i in info.values()}
-            with self._info_lock:
-                snip = {
-                    k: self._snip_cache[k]
-                    for k in keys
-                    if k in self._snip_cache
-                }
+            snip = self._snips.get_many(keys)
             missing_keys = keys - snip.keys()
             if missing_keys:
                 # three single-column IN filters (each pushes down to the
@@ -303,10 +314,7 @@ class _MicroBatcher:
                     (r.repo, r.path, r.commit): r.snippet for r in crows
                 }
                 snip.update(fetched_snips)
-                with self._info_lock:
-                    self._snip_cache.update(fetched_snips)
-                    while len(self._snip_cache) > (1 << 16):
-                        self._snip_cache.popitem(last=False)
+                self._snips.put_many(fetched_snips)
         by_qid = defaultdict(list)
         for r in ranked_rows:
             by_qid[r.qid].append(r)

@@ -366,6 +366,22 @@ def test_chunked_batch_matches_oneshot_at_10k(setup, tmp_path):
     assert wall < 300, f"chunked batch took {wall:.0f}s"
 
 
+def test_chunked_batch_slices_match_oneshot(setup):
+    """Slices compile with global qids (first qid = slice offset): every
+    family's rows equal the one-shot batch, and an empty batch is an
+    empty frame."""
+    engine, _oracle = setup
+    key = lambda r: (r.qid, r.rank, r.doc_id, r.score)
+    want = sorted(engine.search_batch(QUERIES).collect(), key=key)
+    got = sorted(
+        engine.search_batch_chunked(QUERIES, chunk_size=2).collect(), key=key
+    )
+    assert got == want
+    empty = engine.search_batch_chunked([])
+    assert empty.collect() == []
+    assert empty.columns == ["qid", "doc_id", "score", "rank"]
+
+
 FILTER_QUERIES = [
     ("zqmerge zqshard", SearchMode.OR),
     ("zqmerge zqshard", SearchMode.AND),

@@ -5,9 +5,11 @@ parity the reference's web.py has with its CLI)."""
 from __future__ import annotations
 
 import json
+import os
 import threading
 import urllib.parse
 import urllib.request
+from concurrent.futures import Future
 
 import pytest
 
@@ -15,7 +17,7 @@ from search_engine_spark.build.builder import IndexBuilder
 from search_engine_spark.config import EngineConfig
 from search_engine_spark.plans.parser import SearchMode
 from search_engine_spark.query.engine import SearchEngine
-from search_engine_spark.serve import SearchService, make_server
+from search_engine_spark.serve import _LRU, SearchService, make_server
 from search_engine_spark.testing.synth import synth_corpus
 
 CFG = EngineConfig(chunk_docs=64, chunks_per_batch=2, block_docs=8,
@@ -183,13 +185,24 @@ def test_result_cache_disabled(served):
     assert r1["results"] == r2["results"]
 
 
+def _served_rows(rows) -> list[dict]:
+    """Rows as the /search endpoint renders them."""
+    return [
+        {k: v for k, v in r.asDict().items() if k != "qid" and v is not None}
+        for r in sorted(rows, key=lambda r: r.rank)
+    ]
+
+
 def test_micro_batch_mixed_k_and_bad_query_isolation(served):
     """Concurrent requests ride one micro-batched search_batch job; a
     request's k is honored via the rank<=k prefix even when batch-mates
     asked for more, and a malformed query in the batch fails ALONE (the
-    batcher re-runs the batch solo on failure) while its mates still get
-    full results."""
-    _spark, _idx, base = served
+    batcher retries each request as a wave of one) while its mates get
+    exactly the library's ``with_doc_info(search_batch(...))`` rows,
+    snippets included."""
+    spark, index_dir, base = served
+    # the served fixture's layout: corpus.parquet next to idx/
+    corpus_path = os.path.join(os.path.dirname(index_dir), "corpus.parquet")
     out: dict[int, tuple[int, dict]] = {}
 
     reqs = [
@@ -223,7 +236,83 @@ def test_micro_batch_mixed_k_and_bad_query_isolation(served):
     top5 = [(r["doc_id"], r["rank"]) for r in out[3][1]["results"]]
     assert len(top2) <= 2 and top5[: len(top2)] == top2
     assert out[1][0] == 200 and len(out[1][1]["results"]) <= 5
-    # every good response carries snippets from the corpus join
+
+    engine = SearchEngine(spark, index_dir, CFG)
+    corpus = spark.read.parquet(corpus_path)
+    want = {}
     for i in (0, 1, 3):
-        if out[i][1]["results"]:
-            assert "snippet" in out[i][1]["results"][0]
+        q, mode, k = reqs[i]
+        want[i] = _served_rows(
+            engine.with_doc_info(
+                engine.search_batch([(q, SearchMode[mode])], num_return=k),
+                corpus,
+            ).collect()
+        )
+        assert want[i] and all("snippet" in r for r in want[i])
+        assert out[i][1]["results"] == want[i], reqs[i]
+
+    # the same four requests as one wave, deterministically: the wave
+    # fails, each request retries as a wave of one through search_batch
+    svc = SearchService(spark, index_dir, CFG, corpus_path=corpus_path)
+    waves = []
+    inner = svc.engine.search_batch
+
+    def counting(queries, *a, **kw):
+        waves.append(len(queries))
+        return inner(queries, *a, **kw)
+
+    svc.engine.search_batch = counting
+    futs = [Future() for _ in reqs]
+    svc._batcher._run(
+        [(q, SearchMode[m], k, f) for (q, m, k), f in zip(reqs, futs)]
+    )
+    assert waves == [3, 1, 1, 1, 1]  # 3 distinct (query, mode) pairs
+    with pytest.raises(Exception):
+        futs[2].result(timeout=0)
+    for i in (0, 1, 3):
+        assert _served_rows(futs[i].result(timeout=0)) == want[i], reqs[i]
+
+
+def test_lru_bounds_and_recency():
+    lru = _LRU(2)
+    lru.put_many({"a": 1, "b": 2})
+    assert lru.get_many(["a", "x"]) == {"a": 1}  # a hit refreshes "a"
+    lru.put_many({"c": 3})  # evicts the least recent: "b"
+    assert lru.get_many(["a", "b", "c"]) == {"a": 1, "c": 3}
+    lru.put_many({"a": 9, "d": 4})  # a rewrite refreshes too
+    assert lru.get_many(["a", "c", "d"]) == {"a": 9, "d": 4}
+    off = _LRU(0)  # size 0 stores nothing
+    off.put_many({"a": 1})
+    assert off.get_many(["a"]) == {}
+
+
+def test_lru_concurrent_puts_keep_bound():
+    """Worker threads share the caches: concurrent puts and gets never
+    overshoot or over-evict the bound, and every kept value is intact."""
+    import sys
+
+    lru = _LRU(64)
+    errs: list[BaseException] = []
+
+    def work(t: int) -> None:
+        try:
+            for i in range(2000):
+                lru.put_many({(t, i): i, (t, i, "x"): -i})
+                lru.get_many([(t, i - 1), ((t + 1) % 8, i)])
+        except BaseException as exc:  # pragma: no cover - failure path
+            errs.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(t,)) for t in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads) and not errs
+    kept = lru.get_many(list(lru._d))
+    assert len(kept) == 64
+    assert all(v == (k[1] if len(k) == 2 else -k[1]) for k, v in kept.items())

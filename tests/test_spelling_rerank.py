@@ -135,16 +135,33 @@ def test_rerank_permutes_candidates(setup):
     )
 
 
-def test_batch_spelling_matches_single(setup):
+def test_batch_spelling_matches_single(setup, count_jobs):
     """search_batch must run the same OOV-correction funnel as search() —
-    the two entry points return identical results for a typo query."""
+    the two entry points return identical results for typo queries — and
+    a batch corrects all its typos in one correction job, not one per
+    query."""
     engine, _oracle = setup
-    single = engine.search("zqmrge", SearchMode.AND).collect()
-    batch = engine.search_batch([("zqmrge", SearchMode.AND)]).collect()
-    key = lambda r: r.rank
-    assert [(r.doc_id, r.score) for r in sorted(batch, key=key)] == [
-        (r.doc_id, r.score) for r in sorted(single, key=key)
+    typos = [
+        ("zqmrge", SearchMode.AND),
+        ("zqshrd", SearchMode.OR),
+        ("codc_2 zqmerge", SearchMode.QUERY_EVALUATOR),
     ]
+    key = lambda r: r.rank
+    batch = engine.search_batch(typos).collect()
+    for qid, (q, mode) in enumerate(typos):
+        single = engine.search(q, mode).collect()
+        assert [
+            (r.doc_id, r.score)
+            for r in sorted((r for r in batch if r.qid == qid), key=key)
+        ] == [(r.doc_id, r.score) for r in sorted(single, key=key)], q
+
+    # compiling runs only the correction job(s); spelling results are not
+    # memoized, so every call below corrects again
+    with count_jobs() as one:
+        engine.search_batch(typos[:1])
+    with count_jobs() as three:
+        engine.search_batch(typos)
+    assert 0 < len(three) < 3 * len(one), (len(three), len(one))
 
 
 def test_rerank_scores_candidates_outside_posting_chunks(setup):
