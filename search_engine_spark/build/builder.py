@@ -18,6 +18,10 @@ bucket → write doclens/batch=K → commit lineage row``
   gating, see ``sources/index_store.py``).
 * ``finalize()`` (re)computes the collection stats + term_stats tables
   from committed data; it is idempotent and safe to re-run after resume.
+  ``finalize_incremental()`` folds one new batch in through the same
+  writer (``_finalize``).
+* Layout params come from the index's ``meta.json`` once it exists (the
+  store adopts it at open); the caller's config only lays out a new index.
 
 Build metrics (docs/sec, postings/sec, bytes compressed) are recorded per
 batch in the lineage table.
@@ -25,10 +29,11 @@ batch in the lineage table.
 
 from __future__ import annotations
 
-import json
+import contextlib
 import os
-import threading
+import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -45,6 +50,30 @@ from search_engine_spark.sources.index_store import (
     POSTINGS_SCHEMA,
 )
 
+_COUNT_KEYS = ("n_docs", "n_postings", "n_rows_out", "bytes_postings")
+
+
+def _posting_counts() -> list:
+    """Lineage metric aggregates over a written postings batch: the
+    reserved-term "" rows carry per-chunk doc counts (df), every other
+    row is a (term, chunk) posting row."""
+    is_post = F.col("term") != ""
+    return [
+        F.count(F.when(is_post, 1)).alias("n_rows_out"),
+        F.sum(F.when(is_post, F.col("df"))).alias("n_postings"),
+        F.sum(
+            F.when(
+                is_post,
+                F.length("doc_ids")
+                + F.length("tfs_body")
+                + F.length("tfs_title")
+                + F.length("pos_body")
+                + F.length("pos_title"),
+            )
+        ).alias("bytes_postings"),
+        F.sum(F.when(~is_post, F.col("df"))).alias("n_docs"),
+    ]
+
 
 class IndexBuilder:
     def __init__(
@@ -56,24 +85,22 @@ class IndexBuilder:
         body_col: str = "content",
     ):
         self.spark = spark
-        self.config = config or EngineConfig()
-        self.store = IndexStore(spark, index_dir, self.config)
+        self.store = IndexStore(spark, index_dir, config or EngineConfig())
         self.title_col = title_col
         self.body_col = body_col
-        # serializes the shared lineage-table append when batches run as
-        # concurrent jobs (see build_postings): parallel appends to one
-        # parquet dir can collide on the committer's _temporary staging
-        self._lineage_lock = threading.Lock()
+
+    @property
+    def config(self) -> EngineConfig:
+        """The store's config: an existing index's layout wins."""
+        return self.store.config
 
     # ----- phase A: docs table (doc ids + sha256 + lengths) -----
 
-    def build_docs(self, corpus: DataFrame, overwrite: bool = False) -> None:
+    def build_docs(self, corpus: DataFrame) -> None:
         """Dense doc_id assignment + sha256 + tokenized lengths -> docs/."""
-        import os
-
-        self.store.write_meta()  # pin layout params for query-side readers
-        if not overwrite and os.path.isdir(self.store.docs_path):
+        if os.path.isdir(self.store.docs_path):
             return  # phase A is itself a checkpoint
+        self.store.write_meta()  # pin layout params for every later opener
         n_in = corpus.count()
         # n_in sizes the range partitions so each per-partition id sort
         # stays in-memory regardless of corpus size (see assign_doc_ids).
@@ -93,7 +120,7 @@ class IndexBuilder:
             with_ids.select(
                 "doc_id", "repo", "path", "commit", "lang", "sha256"
             )
-            .write.mode("overwrite" if overwrite else "error")
+            .write.mode("error")
             .parquet(self.store.docs_path)
         )
         # id-assignment integrity: duplicated/dropped ids would silently
@@ -175,13 +202,9 @@ class IndexBuilder:
         # 63.9k for one giant batch; concurrency recovers the gap WITHOUT
         # giving up per-batch commit/resume granularity).  The shared
         # lineage table is the one commit point — its tiny append is
-        # serialized in _run_batch (self._lineage_lock) because two
-        # simultaneous appends to one parquet dir can collide on the
-        # committer's _temporary staging.  Failure semantics are
+        # serialized by IndexStore.append_lineage.  Failure semantics are
         # unchanged: an uncommitted batch is simply re-run on resume,
         # whatever other batches committed around it.
-        from concurrent.futures import ThreadPoolExecutor
-
         with ThreadPoolExecutor(conc) as pool:
             futs = [
                 pool.submit(
@@ -250,25 +273,9 @@ class IndexBuilder:
         # batch metrics ride the write job as observed aggregates — a
         # separate metrics pass would re-read the whole batch output
         # (O(batch) scan per batch: the Amdahl term at streaming scale)
-        is_post = F.col("term") != ""
         obs = Observation(f"batch_{batch_id}_metrics")
         (
-            postings.observe(
-                obs,
-                F.count(F.when(is_post, 1)).alias("rows"),
-                F.sum(F.when(is_post, F.col("df"))).alias("postings"),
-                F.sum(
-                    F.when(
-                        is_post,
-                        F.length("doc_ids")
-                        + F.length("tfs_body")
-                        + F.length("tfs_title")
-                        + F.length("pos_body")
-                        + F.length("pos_title"),
-                    )
-                ).alias("bytes"),
-                F.sum(F.when(~is_post, F.col("df"))).alias("n_docs"),
-            )
+            postings.observe(obs, *_posting_counts())
             .repartition("bucket")
             .sortWithinPartitions("term", "chunk_id")
             .write.mode("overwrite")
@@ -276,119 +283,44 @@ class IndexBuilder:
             .partitionBy("bucket")
             .parquet(self.store.postings_batch_path(batch_id))
         )
-        agg_obs = obs.get
+        agg = obs.get
+        self._write_doclens(batch_id)
+        metric = {
+            "batch_id": batch_id,
+            "first_chunk": first_chunk,
+            "last_chunk": last_chunk,
+            **{k: int(agg[k] or 0) for k in _COUNT_KEYS},
+            "wall_sec": time.time() - t0,
+            "input_fingerprint": f"doc_id:[{lo},{hi})",
+            "engine_version": "0.1.0",
+        }
+        # lineage commit LAST — makes the batch visible
+        self.store.append_lineage(metric)
+        return metric
 
-        # doclens for this batch: copy the reserved-term "" rows (one
-        # bucket, bloom-pruned) written by the posting merge into the
-        # doclens layout
+    def _write_doclens(self, batch_id: int) -> None:
+        """doclens/batch=K = the reserved-term "" rows (one bucket,
+        bloom-pruned) the posting merge wrote to postings/batch=K, so a
+        batch's doclens and postings can never disagree."""
         written = self.spark.read.option(
             "basePath", str(self.store.dir / "postings")
         ).parquet(self.store.postings_batch_path(batch_id))
-        doclens = written.where(F.col("term") == "").select(
+        written.where(F.col("term") == "").select(
             "chunk_id",
             F.col("df").cast("int").alias("n_docs"),
             "doc_ids",
             F.col("tfs_body").alias("doc_lens"),
             F.col("tfs_title").alias("title_lens"),
-        )
-        doclens.write.mode("overwrite").parquet(
+        ).write.mode("overwrite").parquet(
             self.store.doclens_batch_path(batch_id)
         )
-
-        # batch metrics came from the observation on the postings write
-        # (the reserved "" group's df IS the per-chunk doc count) — no
-        # rescan of the written output
-        agg = agg_obs
-        n_docs = agg["n_docs"]
-        wall = time.time() - t0
-        metric = {
-            "batch_id": batch_id,
-            "first_chunk": first_chunk,
-            "last_chunk": last_chunk,
-            "n_docs": int(n_docs or 0),
-            "n_postings": int(agg["postings"] or 0),
-            "n_rows_out": int(agg["rows"]),
-            "bytes_postings": int(agg["bytes"] or 0),
-            "wall_sec": wall,
-            "input_fingerprint": f"doc_id:[{lo},{hi})",
-            "engine_version": "0.1.0",
-        }
-        # lineage commit LAST — makes the batch visible (one writer at a
-        # time: concurrent batch pipelines share this table)
-        with self._lineage_lock:
-            self.spark.createDataFrame([metric]).coalesce(1).write.mode(
-                "append"
-            ).parquet(self.store.lineage_path)
-        return metric
 
     # ----- finalize: collection stats + term stats -----
 
     def finalize(self) -> dict:
-        raw = (
-            self.store.read_doc_lens()
-            .agg(
-                F.count("*").alias("num_docs"),
-                F.sum("doc_len").alias("sum_doc_len"),
-                F.sum("title_len").alias("sum_title_len"),
-                F.max("doc_len").alias("max_doc_len"),
-                F.max("title_len").alias("max_title_len"),
-            )
-            .head()
-        )
-        # averages as exact-int-sum / count (one float division) — the
-        # reference computes cumulative int sums then divides
-        # (ingestion.py:899-910), and rank-identity requires bit-equal
-        # avg lengths in the BM25 denominator; Spark's float `avg` would
-        # differ in the last ulp depending on partition summation order.
-        stats_row = {
-            "num_docs": int(raw.num_docs),
-            "avg_doc_len": (raw.sum_doc_len or 0) / raw.num_docs if raw.num_docs else 0.0,
-            "avg_title_len": (raw.sum_title_len or 0) / raw.num_docs if raw.num_docs else 0.0,
-            "max_doc_len": int(raw.max_doc_len or 0),
-            "max_title_len": int(raw.max_title_len or 0),
-            # exact int sums persisted so finalize_incremental can fold
-            # an increment in without re-reading every batch's doclens
-            # (the averages above must stay bit-equal: int-sum / count)
-            "sum_doc_len": int(raw.sum_doc_len or 0),
-            "sum_title_len": int(raw.sum_title_len or 0),
-        }
-        # total postings from the lineage metrics (committed batches only
-        # — replaced pre-compaction rows would double-count) — avoids a
-        # second full postings scan
-        lineage = self.store.read_lineage_committed()
-        lin = lineage.agg(
-            F.sum("n_postings").alias("n_postings"),
-            F.sum("n_docs").alias("n_docs"),
-        ).head()
-        total_postings = lin.n_postings or 0
-        postings = self.store.read_postings()
-        stats = {
-            **stats_row,
-            "total_postings": int(total_postings),
-            # allocated-id coverage stamp: the committed-lineage n_docs sum
-            # (== docs.count() across deletes AND purges — n_docs means ids
-            # ALLOCATED) these stats reflect.  finalize_incremental
-            # cross-checks it so a crash that committed a batch's lineage
-            # but lost its stats fold can never silently compound — it
-            # detects the stale base and falls back to this full pass.
-            "ids_covered": int(lin.n_docs or 0),
-        }
-        self.spark.createDataFrame([stats]).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(self.store.stats_path)
-
-        term_stats = postings.where(F.col("term") != "").groupBy("bucket", "term").agg(
-            F.sum("df").cast("long").alias("df"),
-            F.count("*").alias("n_chunks"),
-        )
-        (
-            term_stats.repartition("bucket")
-            .sortWithinPartitions("term")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(self.store.term_stats_path)
-        )
-        return stats
+        """Recompute stats + term_stats from every committed batch
+        (idempotent; O(index))."""
+        return self._finalize()
 
     def finalize_incremental(self, batch_id: int) -> dict:
         """Fold ONE new batch into stats + term_stats in O(increment +
@@ -402,77 +334,78 @@ class IndexBuilder:
           bit-equal to a full recompute (one int-sum / count division).
         * term_stats: the increment batch's (bucket, term) contributions
           are merged with the existing table by a union + groupBy-sum
-          (vocabulary-sized shuffle, not postings-sized) written to a
-          staging dir and swapped in.
+          (vocabulary-sized shuffle, not postings-sized).
 
-        Crash safety: the ``_finalize_pending`` marker brackets the whole
-        update — a crash mid-swap fails engine opens loudly and
-        :meth:`repair_pending_finalize` rebuilds via the full
-        :meth:`finalize`.  Falls back to the full path when the stats
-        file predates the persisted sums, and — via the ``ids_covered``
-        allocated-id stamp — when the stats base is STALE (a prior crash
-        landed between a batch's lineage append and its stats fold, a
-        window no marker covers), so a lost fold heals on the next
-        advance instead of compounding silently."""
-        import shutil
-
+        Both go through :meth:`_finalize`, the one stats/term_stats
+        writer, inside a pending-finalize marker: a crash anywhere inside
+        fails engine opens loudly and :meth:`repair_pending_finalize`
+        rebuilds via the full :meth:`finalize`.  Falls back to the full
+        path when the stats file predates the persisted sums, and — via
+        the ``ids_covered`` allocated-id stamp — when the stats base is
+        STALE (see ``_finalize``)."""
         if not os.path.isdir(self.store.stats_path):
             return self.finalize()
         old = self.store.read_stats()
         if old.get("sum_doc_len") is None:
             return self.finalize()  # pre-r4 stats file: one full pass
+        return self._finalize(
+            batch_id, old, marker={"batch_id": batch_id, "incremental": True}
+        )
 
-        # --- stale-base cross-check (closes the r4 ADVICE crash window):
-        # a crash between _run_batch's lineage append (batch visible) and
-        # this method's pending marker leaves stats that silently miss one
-        # batch — the torn-increment gate (docs rows == lineage ids sum)
-        # still passes, and folding later increments onto the stale base
-        # would compound the error permanently.  The stats file therefore
-        # carries ``ids_covered`` (the committed-lineage allocated-id sum
-        # it reflects); if the base doesn't equal the current committed
-        # sum MINUS this batch's ids, some prior fold was lost — rebuild
-        # via the full finalize() (marker-bracketed so a crash inside the
-        # rebuild is still detected by engine opens / repaired).
-        lineage = self.store.lineage_rows_meta(
-            ["batch_id", "replaces", "n_postings", "n_docs"]
+    def _finalize(
+        self,
+        batch_id: int | None = None,
+        old: dict | None = None,
+        marker: dict | None = None,
+    ) -> dict:
+        """The one stats + term_stats writer.  Without ``old`` it
+        aggregates every committed batch; with ``old`` (the current stats
+        row) it folds only ``batch_id`` onto it and unions the batch's
+        term contributions with the live term_stats table.  term_stats is
+        always written to a staging dir and swapped in, so the live table
+        is never half-written.  ``marker`` (a pending-finalize payload)
+        brackets the whole update."""
+        lineage = self.store.committed_lineage(
+            ["batch_id", "n_postings", "n_docs"]
         )
-        replaced: set[int] = set()
-        for r in lineage:
-            if r["replaces"]:
-                replaced.update(r["replaces"])
-        committed_rows = [r for r in lineage if r["batch_id"] not in replaced]
-        total_postings = sum(
-            int(r["n_postings"] or 0) for r in committed_rows
-        )
-        ids_total = sum(int(r["n_docs"] or 0) for r in committed_rows)
-        batch_ids = sum(
-            int(r["n_docs"] or 0)
-            for r in committed_rows
-            if r["batch_id"] == batch_id
-        )
-        if (
-            old.get("ids_covered") is None  # pre-r5 stats file
-            or int(old["ids_covered"]) != ids_total - batch_ids
+        # total postings + allocated-id coverage come from the committed
+        # lineage sums (replaced pre-compaction rows would double-count) —
+        # no postings scan.  ``ids_covered`` (== docs.count() across
+        # deletes AND purges — n_docs means ids ALLOCATED) stamps which
+        # lineage these stats reflect.
+        ids_total = sum(int(r["n_docs"] or 0) for r in lineage)
+        if old is not None and (
+            old.get("ids_covered") != ids_total - sum(
+                int(r["n_docs"] or 0)
+                for r in lineage
+                if r["batch_id"] == batch_id
+            )
+            or os.path.exists(self.store.pending_finalize_path)
         ):
-            with open(self.store.pending_finalize_path, "w") as fh:
-                json.dump(
-                    {
-                        "batch_id": batch_id,
-                        "incremental": True,
-                        "stale_base": True,
-                    },
-                    fh,
-                )
-            stats = self.finalize()
-            os.remove(self.store.pending_finalize_path)
-            return stats
+            # stale base: a crash between _run_batch's lineage append
+            # (batch visible) and a fold's marker left stats silently
+            # missing a batch, a pre-r5 stats file lacks the stamp, or a
+            # crashed writer's marker is still on disk (its stats may be
+            # half-folded).  Folding onto it would compound the error
+            # permanently — rebuild in full instead, marker-bracketed.
+            old = None
+            marker = {**marker, "stale_base": True}
+        batches = (
+            sorted(r["batch_id"] for r in lineage)
+            if old is None
+            else [batch_id]
+        )
+        base = old or dict.fromkeys(
+            ("num_docs", "sum_doc_len", "sum_title_len", "max_doc_len",
+             "max_title_len"),
+            0,
+        )
+        live = self.store.term_stats_path
+        staging, retired = live + ".staging", live + ".retired"
 
-        with open(self.store.pending_finalize_path, "w") as fh:
-            json.dump({"batch_id": batch_id, "incremental": True}, fh)
-
-        def _fold_stats() -> dict:
+        def _stats() -> dict:
             raw = (
-                self.store.read_doc_lens([batch_id])
+                self.store.read_doc_lens(batches)
                 .agg(
                     F.count("*").alias("num_docs"),
                     F.sum("doc_len").alias("sum_doc_len"),
@@ -482,37 +415,41 @@ class IndexBuilder:
                 )
                 .head()
             )
-            num_docs = int(old["num_docs"]) + int(raw.num_docs)
-            sum_dl = int(old["sum_doc_len"]) + int(raw.sum_doc_len or 0)
-            sum_tl = int(old["sum_title_len"]) + int(raw.sum_title_len or 0)
+            num_docs = int(base["num_docs"]) + int(raw.num_docs)
+            sum_dl = int(base["sum_doc_len"]) + int(raw.sum_doc_len or 0)
+            sum_tl = int(base["sum_title_len"]) + int(raw.sum_title_len or 0)
+            # averages as exact-int-sum / count (one float division) — the
+            # reference computes cumulative int sums then divides
+            # (ingestion.py:899-910), and rank-identity requires bit-equal
+            # avg lengths in the BM25 denominator; Spark's float `avg`
+            # would differ in the last ulp with partition summation order.
             stats = {
                 "num_docs": num_docs,
                 "avg_doc_len": sum_dl / num_docs if num_docs else 0.0,
                 "avg_title_len": sum_tl / num_docs if num_docs else 0.0,
                 "max_doc_len": max(
-                    int(old["max_doc_len"]), int(raw.max_doc_len or 0)
+                    int(base["max_doc_len"]), int(raw.max_doc_len or 0)
                 ),
                 "max_title_len": max(
-                    int(old["max_title_len"]), int(raw.max_title_len or 0)
+                    int(base["max_title_len"]), int(raw.max_title_len or 0)
                 ),
+                # exact int sums persisted so a fold can advance them
+                # without re-reading every batch's doclens
                 "sum_doc_len": sum_dl,
                 "sum_title_len": sum_tl,
-                "total_postings": int(total_postings),
-                "ids_covered": int(ids_total),
+                "total_postings": sum(
+                    int(r["n_postings"] or 0) for r in lineage
+                ),
+                "ids_covered": ids_total,
             }
             self.spark.createDataFrame([stats]).coalesce(1).write.mode(
                 "overwrite"
             ).parquet(self.store.stats_path)
             return stats
 
-        staging = self.store.term_stats_path + ".staging"
-        retired = self.store.term_stats_path + ".retired"
-
-        def _merge_term_stats() -> None:
-            inc = (
-                self.spark.read.parquet(
-                    self.store.postings_batch_path(batch_id)
-                )
+        def _term_stats() -> None:
+            ts = (
+                self.store.read_postings(batches)
                 .where(F.col("term") != "")
                 .groupBy("bucket", "term")
                 .agg(
@@ -520,40 +457,45 @@ class IndexBuilder:
                     F.count("*").alias("n_chunks"),
                 )
             )
-            merged = (
-                self.store.read_term_stats()
-                .unionByName(inc)
-                .groupBy("bucket", "term")
-                .agg(
-                    F.sum("df").cast("long").alias("df"),
-                    F.sum("n_chunks").alias("n_chunks"),
+            if old is not None:
+                ts = (
+                    self.store.read_term_stats()
+                    .unionByName(ts)
+                    .groupBy("bucket", "term")
+                    .agg(
+                        F.sum("df").cast("long").alias("df"),
+                        F.sum("n_chunks").alias("n_chunks"),
+                    )
                 )
-            )
             shutil.rmtree(staging, ignore_errors=True)
             (
-                merged.repartition("bucket")
+                ts.repartition("bucket")
                 .sortWithinPartitions("term")
                 .write.mode("overwrite")
                 .partitionBy("bucket")
                 .parquet(staging)
             )
 
-        # the two halves write disjoint tables (stats vs term_stats
-        # staging) from disjoint inputs — run them as concurrent Spark
-        # jobs; both must succeed before the swap commits anything, and
-        # the pending marker covers a failure of either
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(2) as pool:
-            f_stats = pool.submit(_fold_stats)
-            f_merge = pool.submit(_merge_term_stats)
-            stats = f_stats.result()
-            f_merge.result()
-        shutil.rmtree(retired, ignore_errors=True)
-        os.rename(self.store.term_stats_path, retired)
-        os.rename(staging, self.store.term_stats_path)
-        shutil.rmtree(retired)
-        os.remove(self.store.pending_finalize_path)
+        with (
+            self.store.pending_finalize(marker)
+            if marker
+            else contextlib.nullcontext()
+        ):
+            # the two halves write disjoint tables (stats vs term_stats
+            # staging) from disjoint inputs — run them as concurrent
+            # Spark jobs; both must succeed before the swap commits
+            # term_stats, and the marker covers a failure of either
+            with ThreadPoolExecutor(2) as pool:
+                f_stats = pool.submit(_stats)
+                f_ts = pool.submit(_term_stats)
+                stats = f_stats.result()
+                f_ts.result()
+            # a crashed earlier swap may have left the live dir retired
+            shutil.rmtree(retired, ignore_errors=True)
+            if os.path.isdir(live):
+                os.rename(live, retired)
+            os.rename(staging, live)
+            shutil.rmtree(retired, ignore_errors=True)
         return stats
 
     # ----- deletion: tombstones now, physical purge at compaction -----
@@ -652,25 +594,23 @@ class IndexBuilder:
         chunks containing a deleted doc go through the decode/re-encode
         kernel, every other chunk's rows are moved JVM-side untouched.
         Single writer assumed (like all builder mutations)."""
-        import shutil
-        import time as _time
-
         from search_engine_spark.build.kernels import make_purge_fn
-        from search_engine_spark.sources.index_store import POSTINGS_SCHEMA
 
-        t0 = _time.time()
+        t0 = time.time()
         self.repair_pending_finalize()
-        committed = self.store.committed_batches()
+        lineage = self.store.committed_lineage(
+            ["batch_id", "first_chunk", "last_chunk", *_COUNT_KEYS]
+        )
+        committed = sorted(r["batch_id"] for r in lineage)
         tomb = self.store.read_tombstones()
         if tomb is not None and tomb.isEmpty():
             tomb = None
         if len(committed) <= 1 and tomb is None:
             return {"compacted": False, "batches": committed}
-        all_ids = [
-            r["batch_id"]
-            for r in self.store.lineage_rows_meta(["batch_id"])
-        ]
-        new_id = max(all_ids) + 1
+        # the newest row is never a replaced one: a compaction row takes
+        # the next id above every batch it replaces
+        new_id = committed[-1] + 1
+        sums = {k: sum(int(r[k] or 0) for r in lineage) for k in _COUNT_KEYS}
 
         postings = self.store.read_postings(committed)
         n_deleted = 0
@@ -712,15 +652,9 @@ class IndexBuilder:
         # intact) while splitting each bucket into ~128 MB files, sized
         # from the lineage byte sum the same way id assignment sizes its
         # sort partitions.
-        bytes_total = int(
-            self.store.read_lineage_committed()
-            .agg(F.sum("bytes_postings"))
-            .head()[0]
-            or 0
-        )
         n_out = max(
             self.spark.sparkContext.defaultParallelism,
-            -(-bytes_total // (128 << 20)),
+            -(-sums["bytes_postings"] // (128 << 20)),
         )
         (
             postings.repartitionByRange(n_out, "bucket", "term", "chunk_id")
@@ -730,48 +664,11 @@ class IndexBuilder:
             .partitionBy("bucket")
             .parquet(self.store.postings_batch_path(new_id))
         )
-        if tomb is None:
-            # range-partitioned by chunk so a doclens scan stays
-            # splittable at any doc count (never coalesce(1): doclens is
-            # O(num_docs) bytes overall)
-            doclens = self.store.read_doclens(committed)
-        else:
-            # doclens must drop the purged docs too — re-derive from the
-            # purged postings' reserved-term "" rows (same extraction as
-            # ``_run_batch``), guaranteeing the two stay consistent
-            written = self.spark.read.option(
-                "basePath", str(self.store.dir / "postings")
-            ).parquet(self.store.postings_batch_path(new_id))
-            doclens = written.where(F.col("term") == "").select(
-                "chunk_id",
-                F.col("df").cast("int").alias("n_docs"),
-                "doc_ids",
-                F.col("tfs_body").alias("doc_lens"),
-                F.col("tfs_title").alias("title_lens"),
-            )
-        (
-            doclens.repartitionByRange("chunk_id")
-            .sortWithinPartitions("chunk_id")
-            .write.mode("overwrite")
-            .parquet(self.store.doclens_batch_path(new_id))
-        )
-
-        old = self.store.read_lineage_committed().agg(
-            F.min("first_chunk").alias("first_chunk"),
-            F.max("last_chunk").alias("last_chunk"),
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("n_postings").alias("n_postings"),
-            F.sum("n_rows_out").alias("n_rows_out"),
-            F.sum("bytes_postings").alias("bytes_postings"),
-        ).head()
-        if tomb is None:
-            counts = {
-                "n_docs": int(old.n_docs or 0),
-                "n_postings": int(old.n_postings or 0),
-                "n_rows_out": int(old.n_rows_out or 0),
-                "bytes_postings": int(old.bytes_postings or 0),
-            }
-        else:
+        # the compacted postings carry every surviving chunk's "" row
+        # (moved untouched, or re-encoded by the purge), so doclens come
+        # from them exactly as for a fresh batch
+        self._write_doclens(new_id)
+        if tomb is not None:
             # purged sums differ from the replaced rows' — recount from
             # the written batch (metadata-cheap aggregate scan).  n_docs
             # stays the replaced rows' sum: lineage n_docs means "doc ids
@@ -779,62 +676,46 @@ class IndexBuilder:
             # reused; the docs table keeps tombstoned rows), so the
             # streaming torn-increment gate's identity
             # docs.count() == sum(lineage n_docs) survives purges.
-            w = self.spark.read.parquet(self.store.postings_batch_path(new_id))
-            agg = w.agg(
-                F.sum(F.when(F.col("term") != "", F.col("df"))).alias("posts"),
-                F.sum(F.when(F.col("term") != "", 1)).alias("rows"),
-                F.sum(
-                    F.when(
-                        F.col("term") != "",
-                        F.length("doc_ids") + F.length("tfs_body")
-                        + F.length("tfs_title") + F.length("pos_body")
-                        + F.length("pos_title"),
-                    )
-                ).alias("bytes"),
-            ).head()
-            counts = {
-                "n_docs": int(old.n_docs or 0),
-                "n_postings": int(agg.posts or 0),
-                "n_rows_out": int(agg.rows or 0),
-                "bytes_postings": int(agg.bytes or 0),
-            }
+            agg = (
+                self.spark.read.parquet(self.store.postings_batch_path(new_id))
+                .agg(*_posting_counts())
+                .head()
+            )
+            sums.update(
+                {k: int(agg[k] or 0) for k in _COUNT_KEYS if k != "n_docs"}
+            )
         metric = {
             "batch_id": new_id,
-            "first_chunk": int(old.first_chunk),
-            "last_chunk": int(old.last_chunk),
-            **counts,
-            "wall_sec": _time.time() - t0,
+            "first_chunk": min(int(r["first_chunk"]) for r in lineage),
+            "last_chunk": max(int(r["last_chunk"]) for r in lineage),
+            **sums,
+            "wall_sec": time.time() - t0,
             "input_fingerprint": f"compaction:{committed}|purged:{n_deleted}",
             "engine_version": "0.1.0",
-            "replaces": [int(b) for b in committed],
+            "replaces": committed,
         }
-        if tomb is not None:
-            # a purge changes collection stats, and the lineage append
-            # below is the visibility switch: a crash between the two
-            # would leave purged postings scoring with stale pre-purge
-            # stats.  Write a marker FIRST so that window is detectable —
-            # engines refuse to open on it, and the next builder repairs
-            # by re-running finalize() (idempotent either side of the
-            # append).
-            with open(self.store.pending_finalize_path, "w") as fh:
-                json.dump({"batch_id": new_id}, fh)
-        # append = the commit; a crash before this leaves invisible
-        # orphan dirs (vacuum removes them), after it a consistent index
-        self.spark.createDataFrame([metric]).coalesce(1).write.mode(
-            "append"
-        ).parquet(self.store.lineage_path)
-        if tomb is not None:
-            # physical purge changed the collection: recompute stats +
-            # term_stats so scores match a fresh build over survivors.
-            # finalize() takes total_postings from the committed lineage,
-            # which is now the recounted compaction row.
-            self.finalize()
-            # tombstones are applied — retire them.  A crash between the
-            # lineage commit and this rmtree is safe: the ids are already
-            # absent from postings, so the logical exclusion no-ops and
-            # the next compact() re-applies cleanly.
-            shutil.rmtree(self.store.tombstones_path, ignore_errors=True)
-            os.remove(self.store.pending_finalize_path)
+        if tomb is None:
+            # append = the commit; a crash before this leaves invisible
+            # orphan dirs (vacuum removes them), after it a consistent
+            # index
+            self.store.append_lineage(metric)
+        else:
+            # a purge changes collection stats, and the lineage append is
+            # the visibility switch: a crash between the two would leave
+            # purged postings scoring with stale pre-purge stats.  The
+            # marker makes that window detectable — engines refuse to
+            # open on it, and the next builder repairs by re-running
+            # finalize() (idempotent either side of the append).
+            with self.store.pending_finalize({"batch_id": new_id}):
+                self.store.append_lineage(metric)
+                # finalize() takes total_postings from the committed
+                # lineage, which is now the recounted compaction row
+                self.finalize()
+                # tombstones are applied — retire them.  A crash between
+                # the lineage commit and this rmtree is safe: the ids are
+                # already absent from postings, so the logical exclusion
+                # no-ops and the next compact() re-applies cleanly.
+                shutil.rmtree(self.store.tombstones_path, ignore_errors=True)
         return {
             "compacted": True,
             "batch_id": new_id,
@@ -843,27 +724,19 @@ class IndexBuilder:
         }
 
     def repair_pending_finalize(self) -> bool:
-        """Recover from a crash inside a purging :meth:`compact`: if the
+        """Recover from a crash inside a marker-bracketed stats update (a
+        purging :meth:`compact` or a streaming fold): if the
         ``_finalize_pending`` marker is on disk, stats/term_stats may not
         match the visible postings — re-run :meth:`finalize` (idempotent
         whether the crash hit before or after the lineage append: it
-        recomputes from whatever is committed) and clear the marker.
+        recomputes from whatever is committed, and its staged term_stats
+        swap retires any half-swapped leftovers) and clear the marker.
         Called automatically at the start of :meth:`compact`; engines
         refuse to open while the marker exists."""
-        import shutil
-
-        marker = self.store.pending_finalize_path
-        if not os.path.exists(marker):
+        if not os.path.exists(self.store.pending_finalize_path):
             return False
-        # a crashed finalize_incremental may have left term_stats staging/
-        # retired dirs mid-swap; the full rebuild below replaces the live
-        # table either way, so retire the leftovers first
-        shutil.rmtree(self.store.term_stats_path + ".staging",
-                      ignore_errors=True)
-        shutil.rmtree(self.store.term_stats_path + ".retired",
-                      ignore_errors=True)
         self.finalize()
-        os.remove(marker)
+        os.remove(self.store.pending_finalize_path)
         return True
 
     def vacuum(self) -> dict:
@@ -871,8 +744,6 @@ class IndexBuilder:
         pre-compaction data and crash-orphaned writes.  Run only while no
         build/ingest is in flight (an uncommitted in-progress batch looks
         identical to an orphan)."""
-        import shutil
-
         keep = set(self.store.committed_batches())
         removed = []
         for sub in ("postings", "doclens"):

@@ -102,10 +102,9 @@ def cmd_search(args: argparse.Namespace) -> None:
     from search_engine_spark.query.engine import SearchEngine
 
     spark = _spark("se-search")
-    cfg = EngineConfig(
-        tokenizer=args.tokenizer, enable_spelling=args.spelling
+    engine = SearchEngine(
+        spark, args.index, EngineConfig(enable_spelling=args.spelling)
     )
-    engine = SearchEngine(spark, args.index, cfg)
     mode = SearchMode[args.mode]
     t0 = time.time()
     model = None
@@ -363,8 +362,6 @@ def cmd_compact(args: argparse.Namespace) -> None:
 
     spark = _spark("se-compact")
     builder = IndexBuilder(spark, args.index, EngineConfig())
-    builder.store.load_meta_into_config()
-    builder.config = builder.store.config
     res = builder.compact()
     if args.vacuum and res.get("compacted"):
         res["vacuum"] = builder.vacuum()
@@ -382,8 +379,6 @@ def cmd_delete(args: argparse.Namespace) -> None:
 
     spark = _spark("se-delete")
     builder = IndexBuilder(spark, args.index, EngineConfig())
-    builder.store.load_meta_into_config()
-    builder.config = builder.store.config
     if args.ids:
         res = builder.delete_docs(int(i) for i in args.ids.split(","))
     else:
@@ -506,9 +501,7 @@ def cmd_serve(args: argparse.Namespace) -> None:
         args.index,
         host=args.host,
         port=args.port,
-        config=EngineConfig(
-            tokenizer=args.tokenizer, enable_spelling=args.spelling
-        ),
+        config=EngineConfig(enable_spelling=args.spelling),
         corpus_path=args.corpus,
         model_path=args.model,
     )
@@ -533,7 +526,7 @@ def cmd_repl(args: argparse.Namespace) -> None:
     engine = SearchEngine(
         spark,
         args.index,
-        EngineConfig(tokenizer=args.tokenizer, enable_spelling=args.spelling),
+        EngineConfig(enable_spelling=args.spelling),
     )
     corpus = None
     if args.corpus:
@@ -619,7 +612,6 @@ def main(argv: list[str] | None = None) -> None:
         choices=["AND", "OR", "NOT", "PHRASE", "QUERY_EVALUATOR", "SEMANTIC"],
     )
     s.add_argument("--k", type=int, default=10)
-    s.add_argument("--tokenizer", default="simplemma")
     s.add_argument("--rerank", action="store_true")
     s.add_argument("--spelling", action="store_true")
     s.add_argument("--embeddings", default=None,
@@ -759,7 +751,6 @@ def main(argv: list[str] | None = None) -> None:
     sv.add_argument("--index", required=True)
     sv.add_argument("--host", default="127.0.0.1")
     sv.add_argument("--port", type=int, default=8080)
-    sv.add_argument("--tokenizer", default="simplemma")
     sv.add_argument("--spelling", action="store_true")
     sv.add_argument("--corpus", default=None,
                     help="corpus parquet for result snippets")
@@ -774,7 +765,6 @@ def main(argv: list[str] | None = None) -> None:
     rp.add_argument("--mode", default="QUERY_EVALUATOR",
                     choices=["AND", "OR", "NOT", "PHRASE", "QUERY_EVALUATOR"])
     rp.add_argument("--k", type=int, default=10)
-    rp.add_argument("--tokenizer", default="simplemma")
     rp.add_argument("--spelling", action="store_true")
     rp.add_argument("--corpus", default=None,
                     help="corpus path/table for result snippets")

@@ -10,7 +10,7 @@ fixtures pin the code's 1.6.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -60,12 +60,6 @@ class EngineConfig:
     # tokenizer, preprocessing.py:40-44).  "simple": whitespace/word split
     # (SQL-replicable; used for the DuckDB-oracle contract queries).
     tokenizer: str = "simplemma"
-
-    # --- spark ---
-    shuffle_partitions: int = 32
-    arrow_batch_rows: int = 2048
-
-    extra_spark_conf: dict = field(default_factory=dict)
 
 
 DEFAULT_CONFIG = EngineConfig()

@@ -23,7 +23,6 @@ queries, block metadata only for WAND-eligible ones.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -82,39 +81,13 @@ class SearchEngine:
         config: EngineConfig | None = None,
     ):
         self.spark = spark
-        self.config = config or EngineConfig()
-        self.store = IndexStore(spark, index_dir, self.config)
-        # a crashed purging compact() can leave purged postings visible
-        # with stale pre-purge collection stats — BM25 would be silently
-        # wrong.  Fail loudly instead of mis-scoring.  The marker is also
-        # present transiently during every streaming advance's
-        # finalize_incremental, so read its payload and word the error
-        # for the case that actually applies (a reader racing a live
-        # advance should just retry; a crashed writer needs repair).
-        if os.path.exists(self.store.pending_finalize_path):
-            payload = {}
-            try:
-                with open(self.store.pending_finalize_path) as fh:
-                    payload = json.load(fh)
-            except (OSError, ValueError):
-                pass
-            if payload.get("incremental"):
-                detail = (
-                    "a streaming advance()'s finalize_incremental is in "
-                    "flight or crashed mid-update; if an ingester is "
-                    "running, retry after it advances — otherwise run "
-                    "IndexBuilder.repair_pending_finalize()"
-                )
-            else:
-                detail = (
-                    "a purging compact() crashed between its lineage "
-                    "commit and stats recompute; run "
-                    "IndexBuilder.repair_pending_finalize() before querying"
-                )
-            raise RuntimeError(f"index has a pending finalize: {detail}")
+        self.store = IndexStore(spark, index_dir, config or EngineConfig())
+        # a pending finalize means stats may lag the visible postings —
+        # fail loudly instead of mis-scoring
+        self.store.check_no_pending_finalize()
         # layout params (bucket count, chunk size, tokenizer, ...) come from
         # the index itself — a mismatch would empty every pruned lookup
-        self.config = self.store.load_meta_into_config()
+        self.config = self.store.config
         self.stats = self.store.read_stats()
         self._kernel_stats = {
             "num_docs": int(self.stats["num_docs"]),

@@ -7,9 +7,9 @@ lineage row is committed — readers resolve the committed batch list first
 and read only those paths, which is the same commit protocol an Iceberg
 manifest would give us):
 
-``meta.json``    layout params pinned at build time (chunk_docs, buckets,
-                 tokenizer, ...) — queries always read these, never trust
-                 caller config
+``meta.json``    layout params pinned when ``docs/`` is created (chunk_docs,
+                 buckets, tokenizer, ...) — every ``IndexStore`` opener
+                 adopts them over the caller's config
 ``docs/``        doc_id, repo, path, commit, lang, sha256
 ``doclens/batch=K/``  chunk_id, n_docs, doc_ids(bin), doc_lens(bin),
     title_lens(bin) — copied from the reserved-term "" rows the posting
@@ -20,10 +20,17 @@ manifest would give us):
     blk_min_dl(bin), blk_min_tl(bin)
 ``term_stats/bucket=B/``  term, df, n_chunks   (finalize artifact)
 ``stats/``       num_docs, avg_doc_len, avg_title_len, max_doc_len,
-                 max_title_len, total_postings
+                 max_title_len, total_postings, sum_doc_len,
+                 sum_title_len, ids_covered
 ``lineage/``     batch_id, first_chunk, last_chunk, n_docs, n_postings,
                  n_rows_out, bytes_postings, wall_sec, input_fingerprint,
-                 engine_version
+                 engine_version, replaces (compaction rows only)
+``_finalize_pending``  marker present while stats/term_stats may lag the
+                 visible batches (``pending_finalize``)
+
+The commit protocol lives here: ``committed_lineage`` applies the
+``replaces`` rule, ``append_lineage`` is the one commit point, and
+``pending_finalize`` brackets every stats update that can race it.
 
 All binary columns are delta+varbyte (``functions/codec.py``).  The
 reference keeps the same information in packed binary files + a marisa
@@ -39,7 +46,11 @@ the column and nothing reads it); postings keep bloom filters on
 
 from __future__ import annotations
 
+import contextlib
+import dataclasses
+import json
 import os
+import threading
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -105,6 +116,12 @@ class IndexStore:
         self.spark = spark
         self.dir = Path(index_dir)
         self.config = config
+        # serializes lineage appends when batches commit from concurrent
+        # threads: parallel appends to one parquet dir can collide on the
+        # committer's _temporary staging
+        self._lineage_lock = threading.Lock()
+        # an existing index's layout wins over the caller's
+        self.load_meta_into_config()
 
     # ----- layout metadata -----
     @property
@@ -112,8 +129,6 @@ class IndexStore:
         return str(self.dir / "meta.json")
 
     def write_meta(self) -> None:
-        import json
-
         self.dir.mkdir(parents=True, exist_ok=True)
         meta = {f: getattr(self.config, f) for f in LAYOUT_FIELDS}
         meta["engine_version"] = "0.1.0"
@@ -123,9 +138,6 @@ class IndexStore:
     def load_meta_into_config(self) -> EngineConfig:
         """Returns the config with layout fields replaced by the values the
         index was built with (no-op if no meta file)."""
-        import dataclasses
-        import json
-
         if not os.path.exists(self.meta_path):
             return self.config
         with open(self.meta_path) as fh:
@@ -163,11 +175,49 @@ class IndexStore:
 
     @property
     def pending_finalize_path(self) -> str:
-        """Marker written by a purging ``compact()`` before its lineage
-        commit and removed after ``finalize()`` — present on disk only
-        when a crash left purged postings visible with stale pre-purge
-        collection stats (BM25 would be silently wrong)."""
         return str(self.dir / "_finalize_pending")
+
+    @contextlib.contextmanager
+    def pending_finalize(self, payload: dict):
+        """Bracket a stats/term_stats update that visible batches can
+        outrun: the marker is written before the body and removed only
+        if the body returns, so a crash anywhere inside leaves it on disk
+        — engines then refuse to open (``check_no_pending_finalize``)
+        until ``IndexBuilder.repair_pending_finalize`` re-runs the full
+        finalize.  ``payload["incremental"]`` marks a streaming fold."""
+        with open(self.pending_finalize_path, "w") as fh:
+            json.dump(payload, fh)
+        yield
+        os.remove(self.pending_finalize_path)
+
+    def check_no_pending_finalize(self) -> None:
+        """Raise if a finalize is pending: purged postings or a new batch
+        may be visible with stale collection stats, and BM25 would be
+        silently wrong.  The error is worded for the writer that left the
+        marker (a reader racing a live streaming advance should retry; a
+        crashed writer needs repair)."""
+        if not os.path.exists(self.pending_finalize_path):
+            return
+        payload = {}
+        try:
+            with open(self.pending_finalize_path) as fh:
+                payload = json.load(fh)
+        except (OSError, ValueError):
+            pass
+        if payload.get("incremental"):
+            detail = (
+                "a streaming advance()'s finalize_incremental is in "
+                "flight or crashed mid-update; if an ingester is "
+                "running, retry after it advances — otherwise run "
+                "IndexBuilder.repair_pending_finalize()"
+            )
+        else:
+            detail = (
+                "a purging compact() crashed between its lineage "
+                "commit and stats recompute; run "
+                "IndexBuilder.repair_pending_finalize() before querying"
+            )
+        raise RuntimeError(f"index has a pending finalize: {detail}")
 
     def read_tombstones(self) -> DataFrame | None:
         """Deleted doc ids (deduplicated), or None when no deletions are
@@ -184,62 +234,53 @@ class IndexStore:
             .distinct()
         )
 
-    # ----- lineage-gated reads -----
-    def read_lineage(self) -> DataFrame:
-        """All lineage rows; ``mergeSchema`` because compaction rows carry
-        an extra ``replaces`` column older rows lack."""
-        return self.spark.read.option("mergeSchema", "true").parquet(
-            self.lineage_path
-        )
+    # ----- lineage: the commit log -----
+    def committed_lineage(self, columns: list[str]) -> list[dict]:
+        """``columns`` of the visible lineage rows: all rows minus any
+        batch some row's ``replaces`` list names (the compaction commit
+        protocol: one appended row atomically supersedes the batches it
+        rewrote — Iceberg's snapshot semantics on the append-only commit
+        point).  Metric sums over these rows stay correct across
+        compactions (a compaction row carries the sums of the rows it
+        replaced).
 
-    def lineage_rows_meta(self, columns: list[str]) -> list[dict]:
-        """Lineage rows read DRIVER-SIDE with pyarrow (per-fragment, so
-        the mixed schema — compaction rows carry ``replaces``, plain
-        batch rows don't — needs no mergeSchema pass).  The lineage
-        table is O(#batches) tiny rows but is consulted by every engine
-        open and every streaming advance; bookkeeping this small must
-        not pay a Spark job per read.  Local-filesystem layout (the
-        sandbox + spark-submit driver); a remote object store would pass
-        a pyarrow filesystem here."""
+        Read DRIVER-SIDE with pyarrow, per fragment, so the mixed schema
+        (only compaction rows carry ``replaces``) needs no merge pass and
+        no Spark job: every engine open, streaming advance and finalize
+        consults it.  Local-filesystem layout; a remote object store
+        would pass a pyarrow filesystem here."""
         import pyarrow.dataset as pads
 
-        out: list[dict] = []
         if not os.path.isdir(self.lineage_path):
-            return out
-        d = pads.dataset(self.lineage_path, format="parquet")
-        for frag in d.get_fragments():
-            names = set(frag.physical_schema.names)
-            cols = [c for c in columns if c in names]
-            t = frag.to_table(columns=cols)
-            for i in range(t.num_rows):
-                row = {c: t[c][i].as_py() for c in cols}
-                for c in columns:
-                    row.setdefault(c, None)
-                out.append(row)
-        return out
+            return []
+        want = set(columns) | {"batch_id", "replaces"}
+        rows: list[dict] = []
+        lineage = pads.dataset(self.lineage_path, format="parquet")
+        for frag in lineage.get_fragments():
+            cols = [c for c in frag.physical_schema.names if c in want]
+            rows.extend(frag.to_table(columns=cols).to_pylist())
+        replaced = {b for r in rows for b in r.get("replaces") or ()}
+        return [
+            {c: r.get(c) for c in columns}
+            for r in rows
+            if r["batch_id"] not in replaced
+        ]
 
     def committed_batches(self) -> list[int]:
-        """Visible batches = all lineage rows minus any batch some row's
-        ``replaces`` list names (the compaction commit protocol: one
-        appended row atomically supersedes the batches it rewrote —
-        Iceberg's snapshot semantics on the same append-only commit point
-        ``IndexBuilder._run_batch`` uses).  Driver-side metadata read —
-        no Spark job."""
-        rows = self.lineage_rows_meta(["batch_id", "replaces"])
-        replaced: set[int] = set()
-        for r in rows:
-            if r["replaces"]:
-                replaced.update(r["replaces"])
+        """Visible batch ids, sorted (see :meth:`committed_lineage`)."""
         return sorted(
-            r["batch_id"] for r in rows if r["batch_id"] not in replaced
+            r["batch_id"] for r in self.committed_lineage(["batch_id"])
         )
 
-    def read_lineage_committed(self) -> DataFrame:
-        """Lineage rows of visible batches only — metric sums (n_docs,
-        n_postings) over this frame stay correct across compactions
-        (a compaction row carries the sums of the rows it replaced)."""
-        committed = self.committed_batches()
-        return self.read_lineage().where(F.col("batch_id").isin(committed))
+    def append_lineage(self, row: dict) -> None:
+        """THE commit: appending a batch's lineage row makes its data
+        dirs visible (and, with ``replaces``, hides the batches it
+        rewrote).  One writer at a time — concurrent batch pipelines
+        share this table."""
+        with self._lineage_lock:
+            self.spark.createDataFrame([row]).coalesce(1).write.mode(
+                "append"
+            ).parquet(self.lineage_path)
 
     def read_postings(self, batches: list[int] | None = None) -> DataFrame:
         if batches is None:

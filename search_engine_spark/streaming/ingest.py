@@ -33,11 +33,12 @@ write) triggers one anti-join rescan that also repairs the state.
 ``compact_staging()`` retires fully consumed sink files.
 
 Each increment commits one lineage batch (variable chunk count — batch
-metric rows record the chunk range) and re-runs the idempotent
-``finalize()`` so stats/term_stats cover the new data.  Readers opened
-before an increment keep their committed-batch snapshot; re-open a
-``SearchEngine`` to see newly committed batches (same snapshot-isolation
-behavior as the batch builder's resume).
+metric rows record the chunk range) and folds it into stats/term_stats
+with ``finalize_incremental()``.  The index layout (chunk size, buckets,
+tokenizer) is the one pinned in ``meta.json`` once the index exists.
+Readers opened before an increment keep their committed-batch snapshot;
+re-open a ``SearchEngine`` to see newly committed batches (same
+snapshot-isolation behavior as the batch builder's resume).
 """
 
 from __future__ import annotations
@@ -65,9 +66,8 @@ class StreamingIndexer:
         body_col: str = "content",
     ):
         self.spark = spark
-        self.config = config or EngineConfig()
         self.builder = IndexBuilder(
-            spark, index_dir, self.config, title_col, body_col
+            spark, index_dir, config or EngineConfig(), title_col, body_col
         )
         self.staging_dir = staging_dir
         self.corpus_dir = os.path.join(staging_dir, "corpus")
@@ -331,8 +331,8 @@ class StreamingIndexer:
         lineage commit, so a torn increment leaves it stale and the next
         call falls back to one full rescan with the key anti-join; a docs
         append without its lineage commit is caught by the count gate."""
-        cfg = self.config
         store = self.builder.store
+        cfg = store.config
         if not os.path.isdir(self.corpus_dir):
             # nothing staged yet (start() never ran or the stream was empty)
             n = self._lineage_doc_count()
@@ -566,14 +566,7 @@ class StreamingIndexer:
         """Ids covered by committed lineage (driver-side metadata read,
         no Spark job).  Lineage ``n_docs`` means ids ALLOCATED, so the
         sum equals ``docs.count()`` across deletes and purges."""
-        store = self.builder.store
-        rows = store.lineage_rows_meta(["batch_id", "replaces", "n_docs"])
-        replaced: set[int] = set()
-        for r in rows:
-            if r["replaces"]:
-                replaced.update(r["replaces"])
         return sum(
             int(r["n_docs"] or 0)
-            for r in rows
-            if r["batch_id"] not in replaced
+            for r in self.builder.store.committed_lineage(["n_docs"])
         )

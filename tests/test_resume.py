@@ -26,14 +26,22 @@ def _postings_snapshot(store):
     )
 
 
-def test_interrupted_build_resumes_identically(spark, tmp_path):
-    rows = synth_corpus(n_docs=200, seed=21)
-    corpus = spark.createDataFrame(rows)
+@pytest.fixture(scope="module")
+def corpus(spark):
+    return spark.createDataFrame(synth_corpus(n_docs=200, seed=21))
 
-    # uninterrupted reference build
-    full_dir = str(tmp_path / "full")
-    full = IndexBuilder(spark, full_dir, CFG)
-    full_stats = full.build_all(corpus)
+
+@pytest.fixture(scope="module")
+def full_build(spark, corpus, tmp_path_factory):
+    """Uninterrupted reference build: (builder, stats)."""
+    full = IndexBuilder(spark, str(tmp_path_factory.mktemp("full")), CFG)
+    return full, full.build_all(corpus)
+
+
+def test_interrupted_build_resumes_identically(
+    spark, tmp_path, corpus, full_build
+):
+    full, full_stats = full_build
 
     # interrupted build: stop after 1 of the ~4 batches
     part_dir = str(tmp_path / "part")
@@ -69,6 +77,31 @@ def test_interrupted_build_resumes_identically(spark, tmp_path):
     for r in lin:
         assert r.n_docs > 0 and r.wall_sec > 0
         assert r.input_fingerprint.startswith("doc_id:[")
+
+
+def test_resume_keeps_the_index_layout(spark, tmp_path, corpus, full_build):
+    """A resume whose caller config asks for another layout must keep the
+    layout pinned in meta.json: the resumed batches use it, the meta is
+    not rewritten, and the index equals an uninterrupted build."""
+    import dataclasses
+
+    full, full_stats = full_build
+
+    part_dir = str(tmp_path / "part")
+    part = IndexBuilder(spark, part_dir, CFG)
+    part.build_docs(corpus)
+    part.build_postings(corpus, resume=True, max_batches=1)
+    with open(part.store.meta_path) as fh:
+        meta = fh.read()
+
+    resumed = IndexBuilder(
+        spark, part_dir, dataclasses.replace(CFG, chunk_docs=2 * CFG.chunk_docs)
+    )
+    assert resumed.config.chunk_docs == CFG.chunk_docs
+    assert resumed.build_all(corpus) == full_stats
+    with open(part.store.meta_path) as fh:
+        assert fh.read() == meta
+    assert _postings_snapshot(resumed.store) == _postings_snapshot(full.store)
 
 
 def test_resume_noop_when_complete(spark, tmp_path):

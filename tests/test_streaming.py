@@ -537,6 +537,100 @@ def test_stale_stats_base_heals_on_next_advance(spark, tmp_path):
     ]
 
 
+def _wave_indexer(spark, tmp_path, n_waves):
+    from pyspark.sql import types as T
+
+    rows = synth_corpus(n_docs=64 * n_waves, seed=53)
+    waves = [
+        [dict(r, repo=f"w{i}-" + r["repo"]) for r in rows[64 * i:64 * (i + 1)]]
+        for i in range(n_waves)
+    ]
+    schema = T.StructType.fromDDL(
+        "repo string, path string, commit string, lang string, content string"
+    )
+    indexer = StreamingIndexer(
+        spark, str(tmp_path / "idx"), str(tmp_path / "stg"), CFG
+    )
+
+    def stage(i):
+        _stage_wave(spark, indexer, str(tmp_path / "arrivals"), waves[i], schema)
+
+    return indexer, stage
+
+
+def _crash_fold(indexer, monkeypatch):
+    """Advance with the term_stats merge failing after the stats half of
+    the incremental fold has run."""
+    from search_engine_spark.sources.index_store import IndexStore
+
+    def boom(self):
+        raise RuntimeError("injected crash")
+
+    monkeypatch.setattr(IndexStore, "read_term_stats", boom)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        indexer.advance(final=True)
+    monkeypatch.undo()
+
+
+def _stats_tables(store):
+    ts = sorted(
+        (r.bucket, r.term, r.df, r.n_chunks)
+        for r in store.read_term_stats().collect()
+    )
+    return store.read_stats(), ts
+
+
+def test_crash_inside_incremental_fold_is_detected_and_repaired(
+    spark, tmp_path, monkeypatch
+):
+    """A streaming fold that dies mid-update leaves the pending-finalize
+    marker: engines refuse to open with the streaming wording, and
+    repair_pending_finalize() rebuilds stats + term_stats to equal a full
+    finalize()."""
+    import os
+
+    indexer, stage = _wave_indexer(spark, tmp_path, 2)
+    store = indexer.builder.store
+    stage(0)
+    indexer.advance()
+    stage(1)
+    _crash_fold(indexer, monkeypatch)
+
+    assert os.path.exists(store.pending_finalize_path)
+    with pytest.raises(RuntimeError, match="streaming advance"):
+        SearchEngine(spark, str(tmp_path / "idx"), CFG)
+    assert indexer.builder.repair_pending_finalize() is True
+    assert not os.path.exists(store.pending_finalize_path)
+    repaired = _stats_tables(store)
+    assert repaired[0]["num_docs"] == 128
+    indexer.builder.finalize()
+    assert _stats_tables(store) == repaired
+
+
+def test_fold_after_crashed_fold_rebuilds_in_full(
+    spark, tmp_path, monkeypatch
+):
+    """A crashed fold can leave stats that already count its batch while
+    term_stats does not.  The next advance must not fold onto that base
+    (it would drop the crashed batch's terms for good): the marker left
+    on disk sends it through the full finalize."""
+    import os
+
+    indexer, stage = _wave_indexer(spark, tmp_path, 3)
+    store = indexer.builder.store
+    stage(0)
+    indexer.advance()
+    stage(1)
+    _crash_fold(indexer, monkeypatch)
+    stage(2)
+    assert indexer.advance(final=True)["num_docs"] == 192
+
+    assert not os.path.exists(store.pending_finalize_path)
+    folded = _stats_tables(store)
+    indexer.builder.finalize()
+    assert _stats_tables(store) == folded
+
+
 def test_parquet_rows_raises_on_missing_path(tmp_path):
     """A vanished sink delta file must fail at the footer-count gate with
     the real missing-file error, not surface later as a confusing
