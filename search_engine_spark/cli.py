@@ -181,7 +181,7 @@ def cmd_search(args: argparse.Namespace) -> None:
         )
     else:
         ranked = engine.search(args.query, mode, num_return=args.k)
-    out = engine.with_doc_info(ranked).collect()
+    out = engine.attach_doc_info(ranked.collect())
     wall = time.time() - t0
     for r in out:
         print(f"{r.rank:3d}  {r.score:12.6f}  {r.doc_id:10d}  {r.repo}/{r.path}")
@@ -565,7 +565,7 @@ def cmd_repl(args: argparse.Namespace) -> None:
         t = time.time()
         try:
             ranked = engine.search(query, mode, num_return=k)
-            rows = engine.with_doc_info(ranked, corpus).collect()
+            rows = engine.attach_doc_info(ranked.collect(), corpus)
         except Exception as e:  # parse errors etc. must not kill the loop
             print(f"error: {e}", file=_sys.stderr)
             continue

@@ -24,16 +24,54 @@ queries, block metadata only for WAND-eligible ones.
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from search_engine_spark.config import EngineConfig
 from search_engine_spark.functions.tokenizer import get_tokenizer
 from search_engine_spark.plans.parser import SearchMode
 from search_engine_spark.query.kernels import RESULT_SCHEMA, make_query_kernel
 from search_engine_spark.query.plan import CompiledQuery, EMPTY, compile_query
-from search_engine_spark.sources.index_store import IndexStore, term_bucket
+from search_engine_spark.sources.index_store import (
+    DOC_INFO_COLS,
+    IndexStore,
+    term_bucket,
+)
+
+
+class _LRU:
+    """Thread-safe map bounded to ``size`` entries, evicting the least
+    recently read or written; size 0 stores nothing."""
+
+    def __init__(self, size: int):
+        self._size = size
+        self._d: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+
+    def get_many(self, keys) -> dict:
+        """The cached subset of ``keys``; each hit becomes most recent."""
+        with self._lock:
+            out = {}
+            for k in keys:
+                if k in self._d:
+                    self._d.move_to_end(k)
+                    out[k] = self._d[k]
+            return out
+
+    def put_many(self, items: dict) -> None:
+        if not self._size:
+            return
+        with self._lock:
+            for k, v in items.items():
+                self._d[k] = v
+                self._d.move_to_end(k)
+            while len(self._d) > self._size:
+                self._d.popitem(last=False)
+
 
 def _apply_per_qid_limit(
     ranked: DataFrame, n_return: dict[int, int]
@@ -109,6 +147,13 @@ class SearchEngine:
         # matches the pinned batch list; resolving it once also spares
         # every doc-info / filter / facet call a schema-inference job
         self.docs = self.store.read_docs()
+        # attach_doc_info's caches, 2^16 hit docs each (shared by serve's
+        # workers; the pinned snapshot keeps them fresh).  The snippet
+        # cache is paired with the corpus that filled it and replaced for
+        # another corpus.
+        self._info = _LRU(1 << 16)
+        self._snips: tuple = (None, None)
+        self._snips_lock = threading.Lock()
         self._corrector = None
         # WAND skip-rate diagnostics: off by default (accumulator traffic
         # per task is tiny but nonzero); enable_wand_stats() turns it on
@@ -716,52 +761,85 @@ class SearchEngine:
         plan = self.compile(query, mode, num_return=num_return)
         return self.rerank([plan], model=model)
 
+    def attach_doc_info(
+        self, rows: list, corpus: DataFrame | None = None
+    ) -> list[Row]:
+        """The one doc-info assembler (reference ``get_doc_info``,
+        inverted_index.py:1186-1219): collected ranked rows -> rows of
+        doc_id, qid, score, rank, repo, path, commit, lang (plus
+        ``snippet`` with a corpus) in (qid, rank) order.  Metadata is
+        ``IndexStore.doc_info_for`` (no Spark job; a doc without a docs
+        row gets None); snippets cost one corpus scan for uncached docs."""
+        rows = sorted(rows, key=lambda r: (r.qid, r.rank))
+        ids = {r.doc_id for r in rows}
+        info = self._info.get_many(ids)
+        missing = ids - info.keys()
+        if missing:
+            fetched = self.store.doc_info_for(missing)
+            info.update(fetched)
+            self._info.put_many(fetched)
+        if corpus is not None:
+            snip = self._snippets(corpus, {i[:3] for i in info.values()})
+        none = (None,) * len(DOC_INFO_COLS)
+        out = []
+        for r in rows:
+            i = info.get(r.doc_id)
+            d = {"doc_id": r.doc_id, "qid": r.qid, "score": r.score,
+                 "rank": r.rank, **dict(zip(DOC_INFO_COLS, i or none))}
+            if corpus is not None:
+                d["snippet"] = snip.get(i[:3]) if i else None
+            out.append(Row(**d))
+        return out
+
+    def _snippets(self, corpus: DataFrame, keys: set) -> dict:
+        """(repo, path, commit) -> snippet for ``keys``."""
+        with self._snips_lock:
+            if self._snips[0] is not corpus:
+                self._snips = (corpus, _LRU(1 << 16))
+            cache = self._snips[1]
+        snip = cache.get_many(keys)
+        missing = keys - snip.keys()
+        if missing:
+            # three single-column IN filters (each pushes down to the
+            # corpus scan); the commit hash alone is near-unique, so
+            # over-selection from the conjunction is negligible and the
+            # exact triple match happens in the dict lookup
+            crows = corpus.where(
+                F.col("commit").isin(sorted({k[2] for k in missing}))
+                & F.col("repo").isin(sorted({k[0] for k in missing}))
+                & F.col("path").isin(sorted({k[1] for k in missing}))
+            ).select(
+                "repo", "path", "commit",
+                F.substring(
+                    "content", 1, self.config.snippet_length
+                ).alias("snippet"),
+            ).collect()
+            fetched = {(r.repo, r.path, r.commit): r.snippet for r in crows}
+            snip.update(fetched)
+            cache.put_many(fetched)
+        return snip
+
     def with_doc_info(
         self, ranked: DataFrame, corpus: DataFrame | None = None
     ) -> DataFrame:
-        """Join doc metadata (and snippets when the corpus is supplied) —
-        reference ``get_doc_info`` (inverted_index.py:1186-1219)."""
-        # the docs table is corpus-row-count sized: never broadcast or
-        # shuffle it.  Prune it to the hit set with a broadcast SEMI join
-        # (the only broadcast of the tiny ranked ids — the docs side is a
-        # streamed scan), then broadcast the <= |ranked| pruned metadata
-        # back onto the ranked rows.
-        #
-        # Each side that feeds more than one downstream plan is pinned
-        # with a LAZY localCheckpoint so the expensive subplans run
-        # exactly ONCE: the ranked query (otherwise re-executed by the
-        # hit-id broadcast AND the final join) and the pruned docs scan
-        # (otherwise re-scanned by the snippet-key broadcast).  Both
-        # checkpoints are top-k sized — never corpus sized.  Lazy, not
-        # eager: the first broadcast job materializes them in passing,
-        # where eager would pay extra serialized job floors up front
-        # (measured 0.94 vs 0.74 s warm-request p50 at 40k docs).
-        ranked = ranked.localCheckpoint(eager=False)
-        docs = self.docs.select("doc_id", "repo", "path", "commit", "lang")
-        hit_ids = ranked.select("doc_id").distinct()
-        docs_hit = docs.join(F.broadcast(hit_ids), "doc_id", "leftsemi")
+        """``attach_doc_info`` as a DataFrame.  It COLLECTS ``ranked``, so
+        it is for top-k-sized results; the frame holds local rows in
+        (qid, rank) order and runs no Spark job of its own."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = T.StructType(
+            [ranked.schema[c] for c in ("doc_id", "qid", "score", "rank")]
+            + [T.StructField(c, self.docs.schema[c].dataType)
+               for c in DOC_INFO_COLS]
+        )
         if corpus is not None:
-            docs_hit = docs_hit.localCheckpoint(eager=False)
-        out = ranked.join(F.broadcast(docs_hit), "doc_id", "left")
-        if corpus is not None:
-            # same shape for the corpus-sized snippet source; the keys
-            # come from the already-pruned docs_hit (it carries repo/
-            # path/commit for exactly the hit docs), not from `out`,
-            # which would drag the ranked+docs join into the broadcast
-            snip = corpus.select(
-                "repo", "path", "commit",
-                F.substring("content", 1, self.config.snippet_length).alias(
-                    "snippet"
-                ),
-            )
-            keys = docs_hit.select("repo", "path", "commit").distinct()
-            snip_hit = snip.join(
-                F.broadcast(keys), ["repo", "path", "commit"], "leftsemi"
-            )
-            out = out.join(
-                F.broadcast(snip_hit), ["repo", "path", "commit"], "left"
-            )
-        return out.orderBy("qid", "rank")
+            schema.add("snippet", T.StringType())
+        rows = self.attach_doc_info(ranked.collect(), corpus)
+        table = pa.Table.from_pylist(
+            [r.asDict() for r in rows], schema=to_arrow_schema(schema)
+        )
+        return self.spark.createDataFrame(table, schema)
 
     def _empty_ranked(self) -> DataFrame:
         return self.spark.createDataFrame([], RESULT_SCHEMA + ", rank int")

@@ -38,31 +38,25 @@ takes the rank <= k prefix (top-k is rank-stable in k).  A failed wave
 one through the same path, so only the offender fails.  Rerank
 requests keep the solo path (the MLP stage is per-query).
 
-Two serving-only fast paths on top of the batcher (results stay
-bit-identical to ``SearchEngine.search`` + ``with_doc_info``):
+Doc info is assembled driver-side by ``SearchEngine.attach_doc_info``,
+the same method ``with_doc_info`` and the CLI call: a wave collects its
+ranked rows, looks up their metadata with a pyarrow docs read (no Spark
+job) and, when a corpus is attached, runs one snippet scan for the docs
+not yet cached.  The engine's doc-info and snippet caches are shared by
+the batcher's workers.
 
-* **Driver-side doc-info assembly.**  ``with_doc_info`` is built for
-  arbitrary downstream DataFrame plans, so it localCheckpoints the
-  ranked subplan and runs broadcast joins — ~2 extra job floors per
-  request wave.  The batcher already collects the ranked rows, so it
-  fetches metadata for the <= batch*k hit ids with ONE pushdown-
-  filtered docs scan (``doc_id IN (...)`` reaches the parquet
-  row-group filters) and one more for snippets when a corpus is
-  attached, then zips rows driver-side.  Hit sets beyond
-  ``_MAX_DRIVER_IDS`` fall back to the distributed ``with_doc_info``
-  join (the 100-TB guard: never ship an unbounded id list).
-* **A snapshot-scoped result cache.**  Real query logs are Zipf —
-  repeated queries dominate — and a cache hit costs zero Spark jobs.
-  Soundness: ``SearchEngine`` resolves its committed-batch list,
-  tombstones and docs table ONCE at open (``SearchEngine.__init__``), so
-  the engine's view of the index is immutable for its lifetime and a
-  cache entry can never be staler than the engine serving it.  New data
-  requires a new ``SearchService`` (exactly as it already requires a new
-  engine), which starts cold.  Entries store the full rank-ordered row list at
-  the k they were computed with; smaller-k requests take the prefix,
-  larger-k requests miss and recompute.  The result, doc-info and
-  snippet caches are each one bounded ``_LRU`` (result cache:
-  ``cache_size`` entries, 0 disables).
+A **snapshot-scoped result cache** sits on top of the batcher.  Real
+query logs are Zipf — repeated queries dominate — and a cache hit costs
+zero Spark jobs.  Soundness: ``SearchEngine`` resolves its
+committed-batch list, tombstones and docs table ONCE at open
+(``SearchEngine.__init__``), so the engine's view of the index is
+immutable for its lifetime and a cache entry can never be staler than
+the engine serving it.  New data requires a new ``SearchService``
+(exactly as it already requires a new engine), which starts cold.
+Entries store the full rank-ordered row list at the k they were computed
+with; smaller-k requests take the prefix, larger-k requests miss and
+recompute.  The result cache is one bounded ``_LRU`` of ``cache_size``
+entries (0 disables).
 """
 
 from __future__ import annotations
@@ -71,55 +65,16 @@ import json
 import queue as _queue
 import threading
 import time
-from collections import OrderedDict, defaultdict
+from collections import defaultdict
 from concurrent.futures import Future
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
-from pyspark.sql import Row, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 from search_engine_spark.config import EngineConfig
 from search_engine_spark.plans.parser import SearchMode
-from search_engine_spark.query.engine import SearchEngine
-
-# Above this many distinct hit ids the batcher stops assembling doc info
-# driver-side (an IN-list this long no longer pushes down usefully and
-# the collected metadata stops being "tiny") and uses the distributed
-# with_doc_info join instead.  64-query batches at k=100 stay well under.
-_MAX_DRIVER_IDS = 8192
-# doc-info and snippet cache entries (one per hit doc)
-_DOC_CACHE_SIZE = 1 << 16
-
-
-class _LRU:
-    """Thread-safe map bounded to ``size`` entries, evicting the least
-    recently read or written; size 0 stores nothing."""
-
-    def __init__(self, size: int):
-        self._size = size
-        self._d: OrderedDict = OrderedDict()
-        self._lock = threading.Lock()
-
-    def get_many(self, keys) -> dict:
-        """The cached subset of ``keys``; each hit becomes most recent."""
-        with self._lock:
-            out = {}
-            for k in keys:
-                if k in self._d:
-                    self._d.move_to_end(k)
-                    out[k] = self._d[k]
-            return out
-
-    def put_many(self, items: dict) -> None:
-        if not self._size:
-            return
-        with self._lock:
-            for k, v in items.items():
-                self._d[k] = v
-                self._d.move_to_end(k)
-            while len(self._d) > self._size:
-                self._d.popitem(last=False)
+from search_engine_spark.query.engine import _LRU, SearchEngine
 
 
 class _MicroBatcher:
@@ -142,11 +97,6 @@ class _MicroBatcher:
         # service lifetime because the engine's index view is pinned at
         # open — see the module docstring.  0 disables.
         self._results = _LRU(cache_size)
-        # doc metadata + snippet caches (immutable for the engine's
-        # pinned snapshot, same argument as the result cache): distinct
-        # queries share hit docs, so later waves fetch only unseen ids
-        self._info = _LRU(_DOC_CACHE_SIZE)
-        self._snips = _LRU(_DOC_CACHE_SIZE)
         # a few workers, not one: a request that arrives just after a
         # batch departs would otherwise serialize behind that batch's
         # whole job.  2-3 overlapping batch jobs keep the scheduler fed
@@ -241,105 +191,13 @@ class _MicroBatcher:
         for q, m, _k, _f in batch:
             uniq.setdefault((q, m), len(uniq))
         ranked = eng.search_batch(list(uniq), num_return=kmax)
-        by_key = self._attach_doc_info(ranked, ranked.collect(), uniq)
-        for (q, m), rows in by_key.items():
-            self._cache_put(q, m, kmax, rows)
-        for q, m, k, fut in batch:
-            fut.set_result([r for r in by_key[(q, m)] if r.rank <= k])
-
-    def _attach_doc_info(
-        self, ranked, ranked_rows: list, uniq: dict
-    ) -> dict:
-        """Zip doc metadata (and snippets when a corpus is attached) onto
-        the collected ranked rows — same output rows as
-        ``with_doc_info(ranked).collect()`` but with the hit-set-sized
-        lookups done as pushdown-filtered scans instead of
-        localCheckpoint + broadcast-join plans (which pay ~2 extra job
-        floors per wave — measured 1.4 s -> 0.8 s per 16-request wave at
-        40k docs)."""
-        eng = self._service.engine
-        corpus = self._service.corpus
-        ids = sorted({r.doc_id for r in ranked_rows})
-        if len(ids) > _MAX_DRIVER_IDS:
-            # scale guard: a hit set this large stops being "tiny" —
-            # take the distributed join path instead
-            rows = eng.with_doc_info(ranked, corpus).collect()
-            by_qid: dict[int, list] = defaultdict(list)
-            for r in rows:
-                by_qid[r.qid].append(r)
-            return {
-                qm: sorted(by_qid[qid], key=lambda r: r.rank)
-                for qm, qid in uniq.items()
-            }
-        info = self._info.get_many(ids)
-        missing = [i for i in ids if i not in info]
-        if missing:
-            docs = eng.docs.select("doc_id", "repo", "path", "commit", "lang")
-            fetched = {
-                r.doc_id: r
-                for r in docs.where(F.col("doc_id").isin(missing)).collect()
-            }
-            info.update(fetched)
-            self._info.put_many(fetched)
-        snip: dict | None = None
-        if corpus is not None:
-            keys = {(i.repo, i.path, i.commit) for i in info.values()}
-            snip = self._snips.get_many(keys)
-            missing_keys = keys - snip.keys()
-            if missing_keys:
-                # three single-column IN filters (each pushes down to the
-                # corpus scan); the commit hash alone is near-unique, so
-                # over-selection from the conjunction is negligible and
-                # the exact triple match happens in the dict lookup below
-                commits = sorted({k[2] for k in missing_keys})
-                repos = sorted({k[0] for k in missing_keys})
-                paths = sorted({k[1] for k in missing_keys})
-                crows = (
-                    corpus.where(
-                        F.col("commit").isin(commits)
-                        & F.col("repo").isin(repos)
-                        & F.col("path").isin(paths)
-                    )
-                    .select(
-                        "repo",
-                        "path",
-                        "commit",
-                        F.substring(
-                            "content", 1, eng.config.snippet_length
-                        ).alias("snippet"),
-                    )
-                    .collect()
-                )
-                fetched_snips = {
-                    (r.repo, r.path, r.commit): r.snippet for r in crows
-                }
-                snip.update(fetched_snips)
-                self._snips.put_many(fetched_snips)
-        by_qid = defaultdict(list)
-        for r in ranked_rows:
+        by_qid: dict[int, list] = defaultdict(list)
+        for r in eng.attach_doc_info(ranked.collect(), self._service.corpus):
             by_qid[r.qid].append(r)
-        out: dict = {}
-        for qm, qid in uniq.items():
-            rows = []
-            for r in sorted(by_qid[qid], key=lambda rr: rr.rank):
-                i = info.get(r.doc_id)
-                d = {
-                    "doc_id": r.doc_id,
-                    "qid": r.qid,
-                    "score": r.score,
-                    "rank": r.rank,
-                    "repo": i.repo if i else None,
-                    "path": i.path if i else None,
-                    "commit": i.commit if i else None,
-                    "lang": i.lang if i else None,
-                }
-                if snip is not None:
-                    d["snippet"] = (
-                        snip.get((i.repo, i.path, i.commit)) if i else None
-                    )
-                rows.append(Row(**d))
-            out[qm] = rows
-        return out
+        for (q, m), qid in uniq.items():
+            self._cache_put(q, m, kmax, by_qid[qid])
+        for q, m, k, fut in batch:
+            fut.set_result([r for r in by_qid[uniq[(q, m)]] if r.rank <= k])
 
 
 class SearchService:
@@ -390,7 +248,7 @@ class SearchService:
             ranked = self.engine.search_reranked(
                 query, mode, num_return=k, model=self.model
             )
-            rows = self.engine.with_doc_info(ranked, self.corpus).collect()
+            rows = self.engine.attach_doc_info(ranked.collect(), self.corpus)
         else:
             rows = self._batcher.submit(query, mode, k)
         took = time.time() - t0

@@ -10,7 +10,9 @@ manifest would give us):
 ``meta.json``    layout params pinned when ``docs/`` is created (chunk_docs,
                  buckets, tokenizer, ...) — every ``IndexStore`` opener
                  adopts them over the caller's config
-``docs/``        doc_id, repo, path, commit, lang, sha256
+``docs/``        doc_id, repo, path, commit, lang, sha256 — append-only
+                 files of dense doc_id ranges; the query side's doc-info
+                 lookup (``doc_info_for``) is a driver-side pyarrow read
 ``doclens/batch=K/``  chunk_id, n_docs, doc_ids(bin), doc_lens(bin),
     title_lens(bin) — copied from the reserved-term "" rows the posting
     merge emits (single tokenize pass; build/kernels.py)
@@ -38,16 +40,18 @@ trie + pickles (``/root/reference/search_engine/ingestion.py:63-171``,
 ``convert_index_to_marisa.py``); here the term dictionary is the
 ``term_stats`` table, looked up on the driver with pyarrow
 (``term_stats_for``): hash-bucket directory pruning + row-group min/max
-over term-sorted bucket files, no Spark job.  ``term_stats`` carries no
-bloom filters (its terms are unique, so a filter would be as large as
-the column and nothing reads it); postings keep bloom filters on
-``term`` for the Spark scan's pushed ``term IN``.
+over term-sorted bucket files (``point_lookup``), no Spark job.
+``term_stats`` carries no bloom filters (its terms are unique, so a
+filter would be as large as the column and nothing reads it); postings
+keep bloom filters on ``term`` for the Spark scan's pushed ``term IN``.
 """
 
 from __future__ import annotations
 
+import bisect
 import contextlib
 import dataclasses
+import functools
 import json
 import os
 import threading
@@ -92,16 +96,6 @@ PARTIALS_SCHEMA = T.StructType(
     ]
 )
 
-DOCLENS_SCHEMA = T.StructType(
-    [
-        T.StructField("chunk_id", T.LongType(), False),
-        T.StructField("n_docs", T.IntegerType(), False),
-        T.StructField("doc_ids", T.BinaryType(), False),
-        T.StructField("doc_lens", T.BinaryType(), False),
-        T.StructField("title_lens", T.BinaryType(), False),
-    ]
-)
-
 
 # layout fields baked into a built index — queries MUST use the builder's
 # values (a bucket-count mismatch silently empties every term lookup)
@@ -109,6 +103,9 @@ LAYOUT_FIELDS = (
     "chunk_docs", "block_docs", "n_term_buckets", "chunks_per_batch",
     "tokenizer",
 )
+
+# the docs-table metadata a doc-info lookup returns, in tuple order
+DOC_INFO_COLS = ("repo", "path", "commit", "lang")
 
 
 class IndexStore:
@@ -303,6 +300,33 @@ class IndexStore:
     def read_docs(self) -> DataFrame:
         return self.spark.read.parquet(self.docs_path)
 
+    @functools.cached_property
+    def _docs_fragments(self) -> list:
+        """``docs/`` files with their footers, resolved once per store.
+        Docs rows are append-only under dense, never reused ids, so a
+        file appended after this listing holds only ids that no posting
+        pinned at engine open can name."""
+        import pyarrow.dataset as pads
+
+        frags = list(
+            pads.dataset(self.docs_path, format="parquet").get_fragments()
+        )
+        for frag in frags:
+            frag.ensure_complete_metadata()
+        return frags
+
+    def doc_info_for(self, ids) -> dict[int, tuple]:
+        """``DOC_INFO_COLS`` per doc id, read DRIVER-SIDE with pyarrow (no
+        Spark job): only the row groups whose ``doc_id`` min/max can hold
+        a wanted id are opened (docs files hold dense id ranges, so the
+        pruning is exact).  An id with no docs row has no entry."""
+        if not ids:
+            return {}
+        rows = point_lookup(
+            self._docs_fragments, "doc_id", ids, ["doc_id", *DOC_INFO_COLS]
+        )
+        return {r["doc_id"]: tuple(r[c] for c in DOC_INFO_COLS) for r in rows}
+
     def read_doc_lens(self, batches: list[int] | None = None) -> DataFrame:
         """Decoded per-doc token lengths -> (doc_id, doc_len, title_len).
         ``batches`` restricts to specific lineage batches (an increment's
@@ -351,9 +375,9 @@ class IndexStore:
 
     def term_stats_for(self, tokens: list[str]) -> dict[str, int]:
         """df per token, read DRIVER-SIDE with pyarrow: only the query
-        terms' ``bucket=B`` directories are opened, and ``term IN (...)``
-        is checked against row-group min/max statistics (bucket files are
-        term-sorted, so row groups that cannot hold a term are skipped).
+        terms' ``bucket=B`` directories are opened, and only the row
+        groups whose ``term`` min/max can hold a query term are read
+        (``point_lookup``; bucket files are term-sorted).
         A query's term-stats lookup thus runs no Spark job.  Results are
         memoized per store instance (the index is immutable once opened).
 
@@ -379,13 +403,9 @@ class IndexStore:
                 path = os.path.join(self.term_stats_path, f"bucket={b}")
                 if not os.path.isdir(path):
                     continue
-                tbl = pads.dataset(path, format="parquet").to_table(
-                    columns=["term", "df"],
-                    filter=pads.field("term").isin(terms),
-                )
-                found.update(
-                    zip(tbl["term"].to_pylist(), tbl["df"].to_pylist())
-                )
+                frags = pads.dataset(path, format="parquet").get_fragments()
+                rows = point_lookup(frags, "term", terms, ["term", "df"])
+                found.update((r["term"], r["df"]) for r in rows)
             # checked after the reads, so a root that vanished mid-lookup
             # (bucket dirs then look absent) raises too
             if not os.path.isdir(self.term_stats_path):
@@ -397,6 +417,43 @@ class IndexStore:
         return {t: cache[t] for t in set(tokens) if cache[t] > 0}
 
 
+def row_groups_for(frag, key: str, keys: list) -> list[int]:
+    """Ids of the row groups of parquet fragment ``frag`` whose footer
+    min/max on ``key`` can hold one of the SORTED ``keys`` (a group
+    without statistics is kept)."""
+    frag.ensure_complete_metadata()
+    out = []
+    for rg in frag.row_groups:
+        st = rg.statistics.get(key)
+        if st:
+            i = bisect.bisect_left(keys, st["min"])
+            if i == len(keys) or keys[i] > st["max"]:
+                continue
+        out.append(rg.id)
+    return out
+
+
+def point_lookup(fragments, key: str, keys, columns: list[str]) -> list[dict]:
+    """``columns`` of the rows of ``fragments`` whose ``key`` is in
+    ``keys``, as dicts.  Row groups are picked by footer min/max first
+    (``row_groups_for``): pyarrow 16's ``isin`` filter alone reads every
+    row group, so a point lookup would cost a full file read."""
+    import pyarrow.dataset as pads
+
+    keys = sorted(set(keys))
+    expr = pads.field(key).isin(keys)
+    rows: list[dict] = []
+    for frag in fragments:
+        groups = row_groups_for(frag, key, keys)
+        if groups:
+            rows.extend(
+                frag.subset(row_group_ids=groups)
+                .to_table(columns=columns, filter=expr)
+                .to_pylist()
+            )
+    return rows
+
+
 def term_bucket(term: str, n_buckets: int) -> int:
     """Deterministic, language-independent term shard (same value computable
     in Spark SQL via ``crc32(encode(term,'utf-8')) % n``)."""
@@ -404,6 +461,3 @@ def term_bucket(term: str, n_buckets: int) -> int:
 
     return zlib.crc32(term.encode("utf-8")) % n_buckets
 
-
-def term_bucket_col(col, n_buckets: int):
-    return (F.crc32(F.encode(col, "utf-8")) % n_buckets).cast("int")

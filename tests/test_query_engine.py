@@ -206,68 +206,113 @@ def test_doc_info_join(setup):
     assert all(r.path is not None for r in info)
 
 
-def _tree_indent(line: str) -> int:
-    marks = [i for i in (line.find("+- "), line.find(":- ")) if i >= 0]
-    return min(marks) if marks else -1
+def test_with_doc_info_matches_spark_join(setup, spark, tmp_path):
+    """``with_doc_info`` equals a plain Spark left join of the ranked
+    rows onto the docs table plus the corpus snippet join, built here as
+    an independent oracle: same rows in (qid, rank) order, same column
+    names and types.  A hit id with no docs row keeps None metadata."""
+    from pyspark.sql import functions as F
 
-
-def _broadcast_subtrees(plan_str: str) -> list[str]:
-    """Every BroadcastExchange node's subtree (tree-art indent parse)."""
-    lines = plan_str.splitlines()
-    subs = []
-    for k, line in enumerate(lines):
-        if "BroadcastExchange" not in line:
-            continue
-        d = _tree_indent(line)
-        body = [line]
-        for nxt in lines[k + 1:]:
-            dn = _tree_indent(nxt)
-            if 0 <= dn <= d:
-                break
-            body.append(nxt)
-        subs.append("\n".join(body))
-    return subs
-
-
-def test_doc_info_never_broadcasts_docs_table(setup, spark):
-    """The docs table is corpus-row-count sized: any BroadcastExchange
-    subtree that scans it must be the LeftSemi-pruned hit set, never the
-    raw table (a driver OOM at 100x scale).
-
-    Without a corpus, the pruning semi-join is visible in the output
-    plan; with a corpus, docs_hit is pinned by a lazy localCheckpoint
-    (so the docs scan runs exactly once) and the output plan must
-    broadcast only checkpointed-RDD rows — never a raw docs or corpus
-    scan."""
     engine, _oracle = setup
-    rows = synth_corpus(n_docs=150, seed=7)
-    corpus = spark.createDataFrame(rows)
-    docs_loc = str(engine.store.docs_path)
+    corpus_path = str(tmp_path / "corpus.parquet")
+    spark.createDataFrame(synth_corpus(n_docs=150, seed=7)).write.parquet(
+        corpus_path
+    )
+    corpus = spark.read.parquet(corpus_path)
+    orphan = spark.createDataFrame(
+        [(99, 10**9, 1.0, 1)], "qid int, doc_id long, score double, rank int"
+    )
+    ranked = engine.search_batch(QUERIES[:6], num_return=10).unionByName(
+        orphan
+    )
+    docs = engine.docs.select("doc_id", "repo", "path", "commit", "lang")
+    snip = corpus.select(
+        "repo", "path", "commit",
+        F.substring("content", 1, engine.config.snippet_length).alias(
+            "snippet"
+        ),
+    )
+    meta = ranked.join(docs, "doc_id", "left")
+    oracles = {
+        False: meta,
+        True: meta.join(snip, ["repo", "path", "commit"], "left"),
+    }
+    for with_corpus, want_df in oracles.items():
+        got_df = engine.with_doc_info(ranked, corpus if with_corpus else None)
+        assert {f.name: f.dataType for f in got_df.schema.fields} == {
+            f.name: f.dataType for f in want_df.schema.fields
+        }
+        got = [r.asDict() for r in got_df.collect()]
+        want = sorted(
+            (r.asDict() for r in want_df.collect()),
+            key=lambda d: (d["qid"], d["rank"]),
+        )
+        assert got == want, with_corpus
+        assert got[-1]["qid"] == 99 and got[-1]["repo"] is None
+        assert sum(d["path"] is not None for d in got) > 10
 
-    # arm 1: metadata-only — the docs broadcast must be LeftSemi-pruned
-    ranked = engine.search("zqmerge", SearchMode.AND)
-    meta = engine.with_doc_info(ranked)
-    plan = meta._jdf.queryExecution().executedPlan().toString()
-    hits = 0
-    for sub in _broadcast_subtrees(plan):
-        if docs_loc in sub or "/docs]" in sub:
-            hits += 1
-            assert "LeftSemi" in sub, sub[:2000]
-    assert hits >= 1, plan[:2000]
-    assert len(meta.collect()) > 0
 
-    # arm 2: with snippets — no broadcast subtree may scan the docs
-    # table or the corpus raw (only checkpointed top-k-sized RDDs and
-    # the semi-join-pruned snippet rows are broadcast)
-    ranked = engine.search("zqmerge", SearchMode.AND)
-    out = engine.with_doc_info(ranked, corpus)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    for sub in _broadcast_subtrees(plan):
-        if docs_loc in sub or "/docs]" in sub:
-            assert "LeftSemi" in sub, sub[:2000]
-    info = out.collect()
-    assert len(info) > 0 and all(r.path is not None for r in info)
-    assert all(r.snippet is not None for r in info)
+def test_doc_info_job_counts(setup, spark, tmp_path, count_jobs):
+    """The docs lookup runs no Spark job; ``with_doc_info`` adds no job
+    to the ranked collect without a corpus and one snippet scan with
+    one."""
+    engine, _oracle = setup
+    corpus_path = str(tmp_path / "corpus.parquet")
+    spark.createDataFrame(synth_corpus(n_docs=150, seed=7)).write.parquet(
+        corpus_path
+    )
+    corpus = spark.read.parquet(corpus_path)
+    fresh = SearchEngine(spark, str(engine.store.dir), CFG)  # cold caches
+    with count_jobs() as lookup:
+        info = fresh.store.doc_info_for(range(0, 150, 3))
+    assert lookup == [] and len(info) == 50
+
+    def ranked():
+        return fresh.search_batch(QUERIES[:6], num_return=10)
+
+    with count_jobs() as base:
+        ranked().collect()
+    with count_jobs() as meta:
+        fresh.with_doc_info(ranked()).collect()
+    with count_jobs() as snips:
+        fresh.with_doc_info(ranked(), corpus).collect()
+    assert base and len(meta) <= len(base)
+    assert len(snips) <= len(base) + 1
+
+
+def test_point_lookup_prunes_row_groups(tmp_path):
+    """The shared pyarrow point lookup opens only the row groups whose
+    footer min/max can hold a key, and returns exactly the rows of an
+    unpruned ``isin`` read."""
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+    import pyarrow.parquet as pq
+
+    from search_engine_spark.sources.index_store import (
+        point_lookup,
+        row_groups_for,
+    )
+
+    terms = [f"t{i:06d}" for i in range(4000)]
+    pq.write_table(
+        pa.table({"term": terms, "df": list(range(4000))}),
+        str(tmp_path / "part-0.parquet"),
+        row_group_size=500,
+    )
+    # group 1 and 5 hold a key each; "t001250x" is absent but inside
+    # group 2's range; "a" and "zzz" lie outside every group
+    keys = ["zzz", "t000600", "t002700", "t001250x", "a"]
+    ds = pads.dataset(str(tmp_path), format="parquet")
+    [frag] = ds.get_fragments()
+    assert frag.metadata.num_row_groups == 8
+    assert row_groups_for(frag, "term", sorted(keys)) == [1, 2, 5]
+    got = point_lookup(ds.get_fragments(), "term", keys, ["term", "df"])
+    want = ds.to_table(
+        columns=["term", "df"], filter=pads.field("term").isin(keys)
+    ).to_pylist()
+    assert got == want == [
+        {"term": "t000600", "df": 600}, {"term": "t002700", "df": 2700}
+    ]
 
 
 def test_postings_scan_is_pruned(setup):

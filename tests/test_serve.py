@@ -273,6 +273,99 @@ def test_micro_batch_mixed_k_and_bad_query_isolation(served):
         assert _served_rows(futs[i].result(timeout=0)) == want[i], reqs[i]
 
 
+def test_wave_job_counts_and_rerank_rows(served, count_jobs):
+    """A cache-cold wave with a corpus runs its ranked collect's jobs
+    plus at most one snippet scan (the docs lookup runs none); a wave
+    over already-seen hit docs adds nothing; a rerank request returns
+    the library's ``with_doc_info(search_reranked(...))`` rows."""
+    spark, index_dir, _base = served
+    corpus_path = os.path.join(os.path.dirname(index_dir), "corpus.parquet")
+    svc = SearchService(spark, index_dir, CFG, corpus_path=corpus_path)
+    eng = svc.engine
+    queries = [("zqmerge", SearchMode.AND), ("zqmerge zqshard", SearchMode.OR)]
+
+    def wave(k: int) -> list:
+        futs = [Future() for _ in queries]
+        svc._batcher._run_wave(
+            [(q, m, k, f) for (q, m), f in zip(queries, futs)]
+        )
+        return [f.result(timeout=0) for f in futs]
+
+    with count_jobs() as ranked:
+        eng.search_batch(queries, num_return=5).collect()
+    with count_jobs() as cold:
+        first = wave(5)
+    assert ranked and len(cold) <= len(ranked) + 1
+    assert all(r.snippet is not None for rows in first for r in rows)
+    with count_jobs() as warm:
+        again = wave(5)
+    assert len(warm) <= len(ranked)
+    assert again == first
+
+    got = svc.search({"q": "zqmerge zqshard", "mode": "OR", "k": 5,
+                      "rerank": "1"})
+    lib = SearchEngine(spark, index_dir, CFG)
+    want = _served_rows(
+        lib.with_doc_info(
+            lib.search_reranked("zqmerge zqshard", SearchMode.OR,
+                                num_return=5),
+            spark.read.parquet(corpus_path),
+        ).collect()
+    )
+    assert want and got["results"] == want
+
+
+def test_snippet_cache_follows_its_corpus(served):
+    """Serve's workers share the engine's snippet cache, which belongs to
+    one corpus at a time: under concurrent calls alternating between two
+    corpora, every call sees only its own corpus's snippets."""
+    import sys
+
+    from pyspark.sql import Row
+
+    spark, index_dir, _base = served
+    eng = SearchEngine(spark, index_dir, CFG)
+    keys = {("repo", f"p{i}", "c") for i in range(20)}
+
+    class FakeCorpus:  # stands in for the corpus scan's where/select
+        def __init__(self, tag):
+            self.tag = tag
+
+        def where(self, _cond):
+            return self
+
+        def select(self, *_cols):
+            return self
+
+        def collect(self):
+            return [Row(repo=r, path=p, commit=c, snippet=self.tag + p)
+                    for r, p, c in keys]
+
+    corpora = [FakeCorpus("a:"), FakeCorpus("b:")]
+    errs: list[BaseException] = []
+
+    def work(t: int) -> None:
+        try:
+            for i in range(40):
+                c = corpora[(t + i) % 2]
+                got = eng._snippets(c, keys)
+                assert got == {k: c.tag + k[1] for k in keys}
+        except BaseException as exc:  # surfaced after join
+            errs.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(t,)) for t in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads) and not errs, errs[:1]
+
+
 def test_lru_bounds_and_recency():
     lru = _LRU(2)
     lru.put_many({"a": 1, "b": 2})
