@@ -5,7 +5,7 @@ Pipeline per batch of doc-id chunks (SURVEY.md §3.4):
 ``docs slice → mapInPandas(tokenize + local partial postings)
 → groupBy(term, chunk_id).applyInPandas(merge + delta/varbyte encode +
 block max-score metadata) → write postings/batch=K partitioned by term
-bucket → write doclens/batch=K → commit lineage row``
+bucket → commit lineage row``
 
 * The ``(term, chunk_id)`` grouping key is the explicit doc-range salt:
   a high-DF term is merged by many independent tasks whose outputs are
@@ -114,8 +114,8 @@ class IndexBuilder:
         )
         with_ids = assign_doc_ids(slim, n_rows=n_in, trust_sha256=True)
         # doc/title token lengths are NOT computed here — the batch phase
-        # tokenizes exactly once and emits doclens through the posting
-        # shuffle (reserved term "", build/kernels.py)
+        # tokenizes exactly once and emits them through the posting
+        # shuffle as reserved-term "" rows (build/kernels.py)
         (
             with_ids.select(
                 "doc_id", "repo", "path", "commit", "lang", "sha256"
@@ -195,7 +195,7 @@ class IndexBuilder:
                 for b, fc, lc in todo
             ]
         # Pipelined batches: each batch writes only its own
-        # postings/batch=K and doclens/batch=K dirs, so independent
+        # postings/batch=K dir, so independent
         # batches can run as concurrent Spark jobs and fill scheduler
         # slots a single batch's shuffle leaves idle (measured at 5.12M
         # docs: 5 serial default-size batches reached 22.8k docs/s vs
@@ -284,7 +284,6 @@ class IndexBuilder:
             .parquet(self.store.postings_batch_path(batch_id))
         )
         agg = obs.get
-        self._write_doclens(batch_id)
         metric = {
             "batch_id": batch_id,
             "first_chunk": first_chunk,
@@ -298,23 +297,6 @@ class IndexBuilder:
         self.store.append_lineage(metric)
         return metric
 
-    def _write_doclens(self, batch_id: int) -> None:
-        """doclens/batch=K = the reserved-term "" rows (one bucket,
-        bloom-pruned) the posting merge wrote to postings/batch=K, so a
-        batch's doclens and postings can never disagree."""
-        written = self.spark.read.option(
-            "basePath", str(self.store.dir / "postings")
-        ).parquet(self.store.postings_batch_path(batch_id))
-        written.where(F.col("term") == "").select(
-            "chunk_id",
-            F.col("df").cast("int").alias("n_docs"),
-            "doc_ids",
-            F.col("tfs_body").alias("doc_lens"),
-            F.col("tfs_title").alias("title_lens"),
-        ).write.mode("overwrite").parquet(
-            self.store.doclens_batch_path(batch_id)
-        )
-
     # ----- finalize: collection stats + term stats -----
 
     def finalize(self) -> dict:
@@ -326,8 +308,8 @@ class IndexBuilder:
         """Fold ONE new batch into stats + term_stats in O(increment +
         vocabulary) instead of :meth:`finalize`'s O(index) re-aggregation
         — the per-increment cost that matters for streaming ingest at
-        10^12-file scale, where re-scanning every batch's doclens and the
-        full postings table per advance() would dwarf the increment.
+        10^12-file scale, where re-scanning every batch's doc lengths and
+        the full postings table per advance() would dwarf the increment.
 
         * collection stats: the persisted exact int sums (``sum_doc_len``
           etc.) are advanced by the increment's aggregates; averages stay
@@ -434,7 +416,7 @@ class IndexBuilder:
                     int(base["max_title_len"]), int(raw.max_title_len or 0)
                 ),
                 # exact int sums persisted so a fold can advance them
-                # without re-reading every batch's doclens
+                # without re-reading every batch's doc lengths
                 "sum_doc_len": sum_dl,
                 "sum_title_len": sum_tl,
                 "total_postings": sum(
@@ -586,13 +568,14 @@ class IndexBuilder:
         of a fresh batch build.  Without tombstones query results are
         identical (batches are chunk-range disjoint, so compaction moves
         rows, never merges them).  With tombstones the deleted docs are
-        purged from postings and doclens and the collection/term stats
-        are recomputed (:meth:`finalize`), so post-compaction scores
-        equal a fresh build over the surviving corpus — while doc ids
-        stay the original dense ids (never reused; the docs table keeps
-        the tombstoned rows).  Purge cost is deletion-proportional: only
-        chunks containing a deleted doc go through the decode/re-encode
-        kernel, every other chunk's rows are moved JVM-side untouched.
+        purged from postings (their "" doc-length rows included) and the
+        collection/term stats are recomputed (:meth:`finalize`), so
+        post-compaction scores equal a fresh build over the surviving
+        corpus — while doc ids stay the original dense ids (never reused;
+        the docs table keeps the tombstoned rows).  Purge cost is
+        deletion-proportional: only chunks containing a deleted doc go
+        through the decode/re-encode kernel, every other chunk's rows are
+        moved JVM-side untouched.
         Single writer assumed (like all builder mutations)."""
         from search_engine_spark.build.kernels import make_purge_fn
 
@@ -616,18 +599,9 @@ class IndexBuilder:
         n_deleted = 0
         if tomb is not None:
             n_deleted = tomb.count()
-            by_chunk = (
-                tomb.select(
-                    F.floor(F.col("doc_id") / self.config.chunk_docs)
-                    .cast("long").alias("chunk_id"),
-                    "doc_id",
-                )
-                .groupBy("chunk_id")
-                .agg(
-                    F.sort_array(F.collect_list("doc_id")).alias("deleted_ids")
-                )
-                .localCheckpoint()  # tiny; referenced by 3 plans below
-            )
+            by_chunk = self.store.ids_by_chunk(
+                tomb, "deleted_ids"
+            ).localCheckpoint()  # tiny; referenced by 3 plans below
             chunks = by_chunk.select("chunk_id")
             untouched = postings.join(chunks, "chunk_id", "left_anti")
             purged = (
@@ -664,10 +638,8 @@ class IndexBuilder:
             .partitionBy("bucket")
             .parquet(self.store.postings_batch_path(new_id))
         )
-        # the compacted postings carry every surviving chunk's "" row
-        # (moved untouched, or re-encoded by the purge), so doclens come
-        # from them exactly as for a fresh batch
-        self._write_doclens(new_id)
+        # every surviving chunk's "" doc-length row moved with it
+        # (untouched, or re-encoded by the purge)
         if tomb is not None:
             # purged sums differ from the replaced rows' — recount from
             # the written batch (metadata-cheap aggregate scan).  n_docs
@@ -746,6 +718,8 @@ class IndexBuilder:
         identical to an orphan)."""
         keep = set(self.store.committed_batches())
         removed = []
+        # doclens/: per-batch doc-length copies older indexes wrote; no
+        # reader opens them, and each goes when its batch does
         for sub in ("postings", "doclens"):
             base = self.store.dir / sub
             if not base.is_dir():

@@ -53,6 +53,11 @@ CONTRACT_CONFIG = EngineConfig(
 )
 
 _ENGINES: dict[str, object] = {}
+# part of every cached contract index's /tmp tag: bump it whenever the
+# on-disk index layout changes, so a dir an older layout built is never
+# reused (the data fingerprint retires caches when the source data
+# changes)
+INDEX_CACHE_V = "v3-no-doclens-copy"
 
 _TOK_SQL = "regexp_extract_all(lower(text), '[a-z0-9_]+')"
 
@@ -161,12 +166,9 @@ def get_engine(
     key = f"{os.path.abspath(sf_dir)}|{variant}"
     if key in _ENGINES:
         return _ENGINES[key]
-    # bump LAYOUT_V whenever the on-disk index layout changes — a stale
-    # cached dir under /tmp from an older layout must not be reused; the
-    # fingerprint retires caches when the source data itself changes
-    LAYOUT_V = "v2-doclens-in-postings"
     tag = hashlib.sha256(
-        f"{key}|{LAYOUT_V}|{data_fingerprint(os.path.abspath(sf_dir))}".encode()
+        f"{key}|{INDEX_CACHE_V}|{data_fingerprint(os.path.abspath(sf_dir))}"
+        .encode()
     ).hexdigest()[:12]
     index_dir = os.path.join(tempfile.gettempdir(), f"se_contract_{tag}")
     builder = IndexBuilder(spark, index_dir, cfg)
@@ -436,7 +438,7 @@ def q_streaming_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     key = os.path.abspath(sf_dir)
     tag = hashlib.sha256(
-        f"{key}|stream|v1|{data_fingerprint(key)}".encode()
+        f"{key}|stream|{INDEX_CACHE_V}|{data_fingerprint(key)}".encode()
     ).hexdigest()[:12]
     base = os.path.join(tempfile.gettempdir(), f"se_stream_{tag}")
     index_dir = os.path.join(base, "idx")
@@ -497,7 +499,7 @@ def q_compaction_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     key = os.path.abspath(sf_dir)
     tag = hashlib.sha256(
-        f"{key}|compact|v1|{data_fingerprint(key)}".encode()
+        f"{key}|compact|{INDEX_CACHE_V}|{data_fingerprint(key)}".encode()
     ).hexdigest()[:12]
     base = os.path.join(tempfile.gettempdir(), f"se_compact_{tag}")
     index_dir = os.path.join(base, "idx")
@@ -988,7 +990,7 @@ def _delete_engine(spark: SparkSession, sf_dir: str, purge: bool):
 
     key = os.path.abspath(sf_dir)
     tag = hashlib.sha256(
-        f"{key}|delete|v1|{data_fingerprint(key)}".encode()
+        f"{key}|delete|{INDEX_CACHE_V}|{data_fingerprint(key)}".encode()
     ).hexdigest()[:12]
     del_dir = os.path.join(tempfile.gettempdir(), f"se_del_{tag}")
     purge_dir = os.path.join(tempfile.gettempdir(), f"se_purge_{tag}")
@@ -1116,7 +1118,7 @@ def q_search_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     key = os.path.abspath(sf_dir)
     tag = hashlib.sha256(
-        f"{key}|upsert|v1|{data_fingerprint(key)}".encode()
+        f"{key}|upsert|{INDEX_CACHE_V}|{data_fingerprint(key)}".encode()
     ).hexdigest()[:12]
     base = os.path.join(tempfile.gettempdir(), f"se_upsert_{tag}")
     index_dir = os.path.join(base, "idx")

@@ -9,7 +9,7 @@ postings scan ``_cogroup`` is shared with facets and rerank.  One query
 
 ``driver: tokenize → spelling (one job per batch, only on OOV tokens)``
 ``        → term-stats lookup (pyarrow, no Spark job) → compile``
-``cluster: pruned postings scan  ⟂cogroup⟂  doclens scan``
+``cluster: pruned postings scan  ⟂cogroup⟂  doc lengths (cached)``
 ``        → applyInPandas(chunk kernel: decode + set algebra + BM25 +``
 ``          block-max WAND + chunk top-k)``
 ``        → global top-k (TakeOrderedAndProject / ranked window)``
@@ -140,7 +140,8 @@ class SearchEngine:
         # every query into an InMemoryTableScan of the full table (no
         # partition/bloom/column pruning) and at 10^12-file scale the table
         # cannot be materialized; the parquet scan with pushed filters IS
-        # the fast path.  doclens (O(num_docs/chunk_docs) rows) are cached.
+        # the fast path.  The per-chunk doc lengths (the postings' ""
+        # rows, O(num_docs/chunk_docs)) are cached.
         self._postings = self.store.read_postings()
         self._doclens = self.store.read_doclens().cache()
         # the docs table is append-only, so pinning its file listing here
@@ -159,7 +160,7 @@ class SearchEngine:
         # per task is tiny but nonzero); enable_wand_stats() turns it on
         self._wand_acc = None
         # pending tombstones (logical deletes awaiting compaction): one
-        # sorted id array per touched chunk, left-joined onto the doclens
+        # sorted id array per touched chunk, left-joined onto the doc-length
         # cogroup side so the kernel drops the ids from the chunk's doc
         # space (ALL/NOT complement included).  O(touched chunks) rows,
         # resolved once per engine open like the batch list; scores keep
@@ -168,14 +169,7 @@ class SearchEngine:
         tomb = self.store.read_tombstones()
         self._deleted_by_chunk = None
         if tomb is not None:
-            by_chunk = (
-                tomb.select(self._chunk_of().alias("chunk_id"), "doc_id")
-                .groupBy("chunk_id")
-                .agg(
-                    F.sort_array(F.collect_list("doc_id")).alias("deleted_ids")
-                )
-                .cache()
-            )
+            by_chunk = self.store.ids_by_chunk(tomb, "deleted_ids").cache()
             if not by_chunk.isEmpty():
                 self._deleted_by_chunk = by_chunk
 
@@ -323,7 +317,7 @@ class SearchEngine:
         results, e.g. ``F.col("lang") == "python"``.  Scalably: the
         predicate runs as a pruned docs-table scan, surviving ids are
         grouped into per-chunk sorted arrays and inner-joined onto the
-        doclens side of the cogroup — chunks with no surviving doc never
+        doc-length side of the cogroup — chunks with no surviving doc never
         reach the kernel, and the kernel intersects matches before its
         chunk-local top-k.  BM25 scores are unchanged (global collection
         stats), matching a post-hoc metadata restriction.  WAND stays on
@@ -378,10 +372,6 @@ class SearchEngine:
             return live
         return []
 
-    def _chunk_of(self):
-        """The chunk id of the ``doc_id`` column."""
-        return F.floor(F.col("doc_id") / self.config.chunk_docs).cast("long")
-
     def _cogroup(
         self, live: list[CompiledQuery], cols: list[str], doclens: DataFrame,
         kernel, schema: str,
@@ -403,8 +393,8 @@ class SearchEngine:
         )
 
     def _doclens_for(self, doc_filter, base: DataFrame) -> DataFrame:
-        """The cogroup's doclens side: ``base`` limited to chunks with a
-        doc passing ``doc_filter``, with tombstoned ids attached."""
+        """The cogroup's doc-length side: ``base`` limited to chunks with
+        a doc passing ``doc_filter``, with tombstoned ids attached."""
         if doc_filter is not None:
             base = base.join(
                 self._allowed_by_chunk(doc_filter), "chunk_id", "inner"
@@ -421,12 +411,8 @@ class SearchEngine:
         kernel runs.  Per-row array size is bounded by chunk_docs, and
         both join sides are O(num_docs / chunk_docs) rows, so the join
         stays small no matter how wide the filter is."""
-        return (
-            self.docs
-            .where(doc_filter)
-            .select(self._chunk_of().alias("chunk_id"), "doc_id")
-            .groupBy("chunk_id")
-            .agg(F.sort_array(F.collect_list("doc_id")).alias("allowed_ids"))
+        return self.store.ids_by_chunk(
+            self.docs.where(doc_filter), "allowed_ids"
         )
 
     def execute_facets(
@@ -440,7 +426,7 @@ class SearchEngine:
         tallied by its docs-table ``by`` column (repo, lang, ...) —
         scoring and top-k never run.
 
-        Scalably: the facet value of each doc rides the doclens cogroup
+        Scalably: the facet value of each doc rides the doc-length cogroup
         side as one per-chunk array in doc_id order (built once per call
         from a two-column docs scan), the chunk kernel emits per-chunk
         partial counts, and the only shuffle on the match set is the
@@ -459,7 +445,7 @@ class SearchEngine:
         facets = (
             self.docs
             .select(
-                self._chunk_of().alias("chunk_id"),
+                self.store.chunk_of().alias("chunk_id"),
                 "doc_id",
                 F.col(by).cast("string").alias("_fv"),
             )
@@ -582,7 +568,7 @@ class SearchEngine:
         DataFrame -> (qid, doc_id, mlp_score).
 
         Fully distributed: the per-chunk candidate lists are grouped and
-        broadcast-joined onto the doclens side of the cogroup (no driver
+        broadcast-joined onto the doc-length side of the cogroup (no driver
         ``collect()`` — a 10k-query offline rerank stays cluster-bound).
         Chunks without candidates drop out via the inner join; postings
         rows for such chunks meet an empty right side and return nothing.
@@ -595,7 +581,7 @@ class SearchEngine:
 
         model = model or RankingModel.seeded()
         cand_by_chunk = (
-            candidates.withColumn("chunk_id", self._chunk_of())
+            candidates.withColumn("chunk_id", self.store.chunk_of())
             .groupBy("chunk_id")
             .agg(F.collect_list(F.struct("qid", "doc_id")).alias("cands"))
         )

@@ -84,6 +84,14 @@ class ChunkDocs:
     doc_lens: np.ndarray   # int64
     title_lens: np.ndarray
 
+    def lengths(self, ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """float64 (doc_len, title_len) of ``ids``, docs of this chunk."""
+        pos = np.searchsorted(self.doc_ids, ids)
+        return (
+            self.doc_lens[pos].astype(np.float64),
+            self.title_lens[pos].astype(np.float64),
+        )
+
 
 def decode_doclens_row(row) -> ChunkDocs:
     return ChunkDocs(
@@ -94,6 +102,7 @@ def decode_doclens_row(row) -> ChunkDocs:
 
 
 _EMPTY_I64 = np.empty(0, dtype=np.int64)
+_EMPTY_F64 = np.empty(0, dtype=np.float64)
 
 
 def _membership(sorted_arr: np.ndarray, values: np.ndarray) -> np.ndarray:
@@ -106,25 +115,59 @@ def _membership(sorted_arr: np.ndarray, values: np.ndarray) -> np.ndarray:
     return np.where(ok, idx, -1)
 
 
-def _deleted_of(right: pd.DataFrame) -> np.ndarray | None:
-    """Sorted tombstoned ids for this chunk from the left-joined
-    ``deleted_ids`` column; None when absent or null (no deletions)."""
-    if "deleted_ids" not in right.columns:
-        return None
-    cell = right.iloc[0]["deleted_ids"]
-    if cell is None or (isinstance(cell, float) and np.isnan(cell)):
-        return None
-    arr = np.asarray(cell, dtype=np.int64)
-    return arr if arr.size else None
+@dataclass
+class ChunkInput:
+    """One cogrouped chunk, decoded by ``read_chunk``."""
+
+    chunk: ChunkDocs                 # live docs: tombstoned ids dropped
+    terms: dict[str, TermChunk]      # posting rows by term
+    allowed: np.ndarray | None       # sorted doc_filter survivors
+    deleted: np.ndarray | None       # sorted tombstoned ids
+
+    def survivors(self, matched: np.ndarray) -> np.ndarray:
+        """``matched`` minus docs the filter rejects or tombstones
+        delete — applied BEFORE any chunk-local top-k truncation, so the
+        bound counts surviving docs only."""
+        if self.allowed is not None and matched.size:
+            matched = np.intersect1d(matched, self.allowed, assume_unique=True)
+        if self.deleted is not None and matched.size:
+            matched = matched[_membership(self.deleted, matched) < 0]
+        return matched
 
 
-def _drop_deleted(chunk: ChunkDocs, deleted: np.ndarray) -> ChunkDocs:
-    keep = _membership(deleted, chunk.doc_ids) < 0
-    return ChunkDocs(
-        doc_ids=chunk.doc_ids[keep],
-        doc_lens=chunk.doc_lens[keep],
-        title_lens=chunk.title_lens[keep],
-    )
+def _id_array(cell) -> np.ndarray | None:
+    """A per-chunk id-array cell; None when absent or null."""
+    if cell is None or isinstance(cell, float):  # null arrives as None/NaN
+        return None
+    return np.asarray(cell, dtype=np.int64)
+
+
+def read_chunk(
+    left: pd.DataFrame, right: pd.DataFrame, pos_terms: set[str]
+) -> ChunkInput:
+    """The one decoder of a cogrouped chunk: ``right``'s doc-length row,
+    with the engine's optional per-chunk ``allowed_ids`` (metadata filter,
+    inner-joined) and ``deleted_ids`` (tombstones, left-joined: null
+    where the chunk has none) arrays, and ``left``'s posting rows.
+    Tombstoned ids leave the chunk's doc space, so an ALL/NOT complement
+    never resurrects them.  Positions are decoded for ``pos_terms`` only
+    and block metadata whenever the scan read them."""
+    row = next(right.itertuples(index=False))
+    chunk = decode_doclens_row(row)
+    allowed = _id_array(getattr(row, "allowed_ids", None))
+    deleted = _id_array(getattr(row, "deleted_ids", None))
+    if deleted is not None:
+        keep = _membership(deleted, chunk.doc_ids) < 0
+        chunk = ChunkDocs(
+            chunk.doc_ids[keep], chunk.doc_lens[keep], chunk.title_lens[keep]
+        )
+    has_pos = "pos_body" in left.columns
+    has_blk = "blk_last_doc" in left.columns
+    terms = {
+        r.term: decode_term_row(r, has_pos and r.term in pos_terms, has_blk)
+        for r in left.itertuples(index=False)
+    }
+    return ChunkInput(chunk, terms, allowed, deleted)
 
 
 def _phrase_field_match(
@@ -245,11 +288,39 @@ def tf_matrices(
     return tfb, tft
 
 
+def scored_columns(plan: CompiledQuery) -> tuple[tuple, np.ndarray]:
+    """The zip truncation (inverted_index.py:1240): the i-th kept column
+    pairs with the i-th query-token IDF, dropping the longer tail ->
+    (columns, float64 idfs)."""
+    ncols = min(len(plan.columns), len(plan.idfs))
+    return plan.columns[:ncols], np.asarray(plan.idfs[:ncols], np.float64)
+
+
+def bm25_gather(
+    cols: tuple,
+    idfs: np.ndarray,
+    matched: np.ndarray,
+    inp: ChunkInput,
+    stats: dict,
+    k1: float,
+    b: float,
+    title_weight: float,
+) -> np.ndarray:
+    """Fielded BM25 of the chunk's ``matched`` docs over ``cols``."""
+    tfb, tft = tf_matrices(cols, matched, inp.terms)
+    dl, tl = inp.chunk.lengths(matched)
+    score, _, _ = fielded_bm25(
+        idfs, tfb, tft, dl, tl,
+        stats["avg_doc_len"], stats["avg_title_len"],
+        k1=k1, b=b, title_weight=title_weight,
+    )
+    return score
+
+
 def score_and_topk(
     plan: CompiledQuery,
     matched: np.ndarray,
-    terms: dict[str, TermChunk],
-    chunk: ChunkDocs,
+    inp: ChunkInput,
     stats: dict,
     k1: float,
     b: float,
@@ -261,23 +332,52 @@ def score_and_topk(
     ``plan.num_candidates``.
     """
     if matched.size == 0:
-        return _EMPTY_I64, np.empty(0, dtype=np.float64)
-    # zip truncation (inverted_index.py:1240): pair i-th kept column with
-    # i-th query-token IDF, dropping the longer tail
-    ncols = min(len(plan.columns), len(plan.idfs))
-    cols = plan.columns[:ncols]
-    idfs = np.asarray(plan.idfs[:ncols], dtype=np.float64)
-    tfb, tft = tf_matrices(cols, matched, terms)
-    pos = np.searchsorted(chunk.doc_ids, matched)
-    dl = chunk.doc_lens[pos].astype(np.float64)
-    tl = chunk.title_lens[pos].astype(np.float64)
-    score, _, _ = fielded_bm25(
-        idfs, tfb, tft, dl, tl,
-        stats["avg_doc_len"], stats["avg_title_len"],
-        k1=k1, b=b, title_weight=title_weight,
-    )
+        return _EMPTY_I64, _EMPTY_F64
+    cols, idfs = scored_columns(plan)
+    score = bm25_gather(cols, idfs, matched, inp, stats, k1, b, title_weight)
     order = np.lexsort((matched, -score))[: plan.num_candidates]
     return matched[order], score[order]
+
+
+_DTYPES = {"int": "int32", "long": "int64", "double": "float64",
+           "string": "object"}
+
+
+def frame_of(schema: str, parts: list[tuple]) -> pd.DataFrame:
+    """The kernel output frame for a Spark DDL ``schema``: ``parts``
+    holds one tuple of column arrays per contributing plan; no parts
+    gives the empty frame with the schema's dtypes."""
+    fields = [f.split() for f in schema.split(",")]
+    if not parts:
+        return pd.DataFrame(
+            {n: pd.Series([], dtype=_DTYPES[t]) for n, t in fields}
+        )
+    return pd.DataFrame(
+        {n: np.concatenate(col) for (n, _t), col in zip(fields, zip(*parts))}
+    )
+
+
+def _pos_terms(plans: list[CompiledQuery]) -> set[str]:
+    """Terms whose positions some plan needs (phrase matching)."""
+    return {t for p in plans if p.needs_positions for t in p.fetch_terms}
+
+
+def _idle(plans: list[CompiledQuery], left, right) -> bool:
+    """True when no plan can match in this chunk: no doc-length row (a
+    filter or candidate join dropped the chunk), or no posting rows and
+    no plan scanning every chunk."""
+    return len(right) == 0 or (
+        len(left) == 0 and not any(p.scan_all_chunks for p in plans)
+    )
+
+
+def _active(plans: list[CompiledQuery], terms: dict):
+    """The plans that can match in a chunk holding ``terms``."""
+    for p in plans:
+        if p.tree[0] != EMPTY and (
+            p.scan_all_chunks or any(t in terms for t in p.fetch_terms)
+        ):
+            yield p
 
 
 def run_plans_on_chunk(
@@ -294,97 +394,31 @@ def run_plans_on_chunk(
     """Evaluate every compiled query against one chunk's postings."""
     from search_engine_spark.query.wand import wand_topk
 
-    need_pos_terms: set[str] = set()
-    for p in plans:
-        if p.needs_positions:
-            need_pos_terms.update(
-                t for t in p.fetch_terms
-            )
-    any_scan_all = any(p.scan_all_chunks for p in plans)
-    if len(left) == 0 and not any_scan_all:
-        return _empty_result()
-    if len(right) == 0:  # pragma: no cover — every chunk has a doclens row
-        return _empty_result()
-
-    chunk = decode_doclens_row(next(right.itertuples(index=False)))
-    # optional metadata filter: a sorted array of doc ids allowed in this
-    # chunk (joined onto the doclens side by the engine); matches are
-    # intersected with it BEFORE the chunk-local top-k truncation, so the
-    # bound applies to surviving docs only
-    allowed: np.ndarray | None = None
-    if "allowed_ids" in right.columns:
-        allowed = np.asarray(right.iloc[0]["allowed_ids"], dtype=np.int64)
-    # tombstoned docs (left-joined per chunk; null where the chunk has no
-    # deletions): removed from the chunk's doc space so ALL/NOT complement
-    # never resurrects them, and subtracted from every match set before
-    # the chunk-local top-k
-    deleted = _deleted_of(right)
-    if deleted is not None:
-        chunk = _drop_deleted(chunk, deleted)
-    has_pos = "pos_body" in left.columns
+    if _idle(plans, left, right):
+        return frame_of(RESULT_SCHEMA, [])
+    inp = read_chunk(left, right, _pos_terms(plans))
     has_blk = "blk_last_doc" in left.columns
-    terms: dict[str, TermChunk] = {}
-    for row in left.itertuples(index=False):
-        terms[row.term] = decode_term_row(
-            row,
-            need_positions=has_pos and row.term in need_pos_terms,
-            need_blocks=has_blk,
-        )
-
-    out_qid: list[np.ndarray] = []
-    out_doc: list[np.ndarray] = []
-    out_score: list[np.ndarray] = []
-    for plan in plans:
-        if plan.tree[0] == EMPTY:
-            continue
-        if not plan.scan_all_chunks and not any(
-            t in terms for t in plan.fetch_terms
-        ):
-            continue
+    parts = []
+    for plan in _active(plans, inp.terms):
         if use_wand and plan.wand_eligible and has_blk:
             # under a metadata filter or pending deletions wand_topk
             # drops non-surviving candidates per segment before scoring;
             # unfiltered block maxima stay valid (looser) upper bounds,
             # so pruning remains rank-identical (see wand.py docstring)
             docs, scores = wand_topk(
-                plan, terms, chunk, stats, k1, b, title_weight,
-                deleted=deleted, allowed=allowed,
+                plan, inp, stats, k1, b, title_weight,
                 counters=wand_counters,
             )
         else:
-            matched = eval_tree(plan.tree, terms, chunk)
-            if allowed is not None and matched.size:
-                matched = np.intersect1d(
-                    matched, allowed, assume_unique=True
-                )
-            if deleted is not None and matched.size:
-                matched = matched[_membership(deleted, matched) < 0]
+            matched = inp.survivors(eval_tree(plan.tree, inp.terms, inp.chunk))
             docs, scores = score_and_topk(
-                plan, matched, terms, chunk, stats, k1, b, title_weight
+                plan, matched, inp, stats, k1, b, title_weight
             )
         if docs.size:
-            out_qid.append(np.full(docs.size, plan.qid, dtype=np.int32))
-            out_doc.append(docs)
-            out_score.append(scores)
-    if not out_doc:
-        return _empty_result()
-    return pd.DataFrame(
-        {
-            "qid": np.concatenate(out_qid),
-            "doc_id": np.concatenate(out_doc),
-            "score": np.concatenate(out_score),
-        }
-    )
-
-
-def _empty_result() -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "qid": pd.Series([], dtype="int32"),
-            "doc_id": pd.Series([], dtype="int64"),
-            "score": pd.Series([], dtype="float64"),
-        }
-    )
+            parts.append(
+                (np.full(docs.size, plan.qid, dtype=np.int32), docs, scores)
+            )
+    return frame_of(RESULT_SCHEMA, parts)
 
 
 def make_query_kernel(
@@ -396,7 +430,7 @@ def make_query_kernel(
     use_wand: bool = True,
     wand_accumulators: tuple | None = None,
 ):
-    """cogroup(postings-by-chunk, doclens-by-chunk).applyInPandas function.
+    """cogroup(postings-by-chunk, doc-lengths-by-chunk).applyInPandas fn.
 
     ``wand_accumulators``: optional ``(segments_total, segments_scored)``
     pair of Spark accumulators; each kernel invocation flushes its
@@ -433,80 +467,28 @@ def facet_counts_on_chunk(
     """Per-chunk partial facet counts: evaluate each plan's match set
     (full set algebra, NO scoring and NO top-k truncation — facets count
     every match) and tally the matched docs' facet values.  The facet
-    value array rides the doclens side in doc_id order (``facet_ids`` /
-    ``facet_vals``), so the tally is a searchsorted gather — no doc_id
+    value array rides the doc-length side in doc_id order (``facet_ids``
+    / ``facet_vals``), so the tally is a searchsorted gather — no doc_id
     join ever happens; Spark sums the per-chunk partials."""
-    if len(right) == 0:  # pragma: no cover — every chunk has a doclens row
-        return _empty_facets()
-    any_scan_all = any(p.scan_all_chunks for p in plans)
-    if len(left) == 0 and not any_scan_all:
-        return _empty_facets()
-
+    if _idle(plans, left, right):
+        return frame_of(FACET_SCHEMA, [])
+    inp = read_chunk(left, right, _pos_terms(plans))
     row0 = right.iloc[0]
-    chunk = decode_doclens_row(next(right.itertuples(index=False)))
     facet_ids = np.asarray(row0["facet_ids"], dtype=np.int64)
     facet_vals = np.asarray(row0["facet_vals"], dtype=object)
-    allowed: np.ndarray | None = None
-    if "allowed_ids" in right.columns:
-        allowed = np.asarray(row0["allowed_ids"], dtype=np.int64)
-    deleted = _deleted_of(right)
-    if deleted is not None:
-        chunk = _drop_deleted(chunk, deleted)
-
-    need_pos_terms: set[str] = set()
-    for p in plans:
-        if p.needs_positions:
-            need_pos_terms.update(p.fetch_terms)
-    has_pos = "pos_body" in left.columns
-    terms: dict[str, TermChunk] = {}
-    for row in left.itertuples(index=False):
-        terms[row.term] = decode_term_row(
-            row,
-            need_positions=has_pos and row.term in need_pos_terms,
-            need_blocks=False,
-        )
-
-    out_qid: list[np.ndarray] = []
-    out_val: list[np.ndarray] = []
-    out_n: list[np.ndarray] = []
-    for plan in plans:
-        if plan.tree[0] == EMPTY:
-            continue
-        if not plan.scan_all_chunks and not any(
-            t in terms for t in plan.fetch_terms
-        ):
-            continue
-        matched = eval_tree(plan.tree, terms, chunk)
-        if allowed is not None and matched.size:
-            matched = np.intersect1d(matched, allowed, assume_unique=True)
-        if deleted is not None and matched.size:
-            matched = matched[_membership(deleted, matched) < 0]
+    parts = []
+    for plan in _active(plans, inp.terms):
+        matched = inp.survivors(eval_tree(plan.tree, inp.terms, inp.chunk))
         if matched.size == 0:
             continue
         vals = facet_vals[np.searchsorted(facet_ids, matched)]
         uniq, counts = np.unique(vals, return_counts=True)
-        out_qid.append(np.full(uniq.size, plan.qid, dtype=np.int32))
-        out_val.append(uniq)
-        out_n.append(counts.astype(np.int64))
-    if not out_val:
-        return _empty_facets()
-    return pd.DataFrame(
-        {
-            "qid": np.concatenate(out_qid),
-            "value": np.concatenate(out_val),
-            "n": np.concatenate(out_n),
-        }
-    )
-
-
-def _empty_facets() -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "qid": pd.Series([], dtype="int32"),
-            "value": pd.Series([], dtype="object"),
-            "n": pd.Series([], dtype="int64"),
-        }
-    )
+        parts.append((
+            np.full(uniq.size, plan.qid, dtype=np.int32),
+            uniq,
+            counts.astype(np.int64),
+        ))
+    return frame_of(FACET_SCHEMA, parts)
 
 
 def make_facet_kernel(plans: list[CompiledQuery]):

@@ -10,7 +10,7 @@ so the hot path stays in numpy — no per-row Python):
 
 1. Each posting row carries per-block (``block_docs`` postings) metadata:
    max tf_body/tf_title and min doc_len/title_len
-   (``build/kernels.py:encode_posting_group``).  From these and the
+   (``build/kernels.py:merge_groups_vectorized``).  From these and the
    per-column IDF an upper bound on the column's score contribution for
    any doc inside the block is computed — BM25's term weight is monotone
    increasing in tf and decreasing in doc length, so
@@ -36,17 +36,15 @@ from __future__ import annotations
 
 import numpy as np
 
-from search_engine_spark.functions.bm25 import fielded_bm25
 from search_engine_spark.query.kernels import (
-    ChunkDocs,
+    _EMPTY_F64,
+    _EMPTY_I64,
+    ChunkInput,
     TermChunk,
-    _membership,
-    tf_matrices,
+    bm25_gather,
+    scored_columns,
 )
 from search_engine_spark.query.plan import OR, TERM, CompiledQuery
-
-_EMPTY_I64 = np.empty(0, dtype=np.int64)
-_EMPTY_F64 = np.empty(0, dtype=np.float64)
 
 
 def _tree_terms(plan: CompiledQuery) -> list[str]:
@@ -79,21 +77,18 @@ def _block_ubs(
 
 def wand_topk(
     plan: CompiledQuery,
-    terms: dict[str, TermChunk],
-    chunk: ChunkDocs,
+    inp: ChunkInput,
     stats: dict,
     k1: float,
     b: float,
     title_weight: float,
-    deleted: np.ndarray | None = None,
-    allowed: np.ndarray | None = None,
     counters: dict | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """``deleted`` (tombstoned ids) / ``allowed`` (metadata-filter ids):
-    candidates are dropped per segment BEFORE scoring, so the pool and
-    its threshold θ track surviving docs only.  Block maxima computed
-    over the unfiltered postings remain VALID upper bounds (removing
-    docs can only lower a block's true max), just looser — a segment is
+    """Tombstoned and filtered-out candidates (``inp.survivors``) are
+    dropped per segment BEFORE scoring, so the pool and its threshold θ
+    track surviving docs only.  Block maxima computed over the
+    unfiltered postings remain VALID upper bounds (removing docs can
+    only lower a block's true max), just looser — a segment is
     skipped only when even its unfiltered bound is below θ, so pruning
     under deletions stays rank-identical, merely less aggressive.
 
@@ -103,12 +98,11 @@ def wand_topk(
     actually consumed before the θ-cutoff.  The skip rate
     ``1 - scored/total`` is the direct evidence that block-max pruning
     fired (vs merely not losing) on a given workload."""
+    terms = inp.terms
     tree_terms = [t for t in _tree_terms(plan) if t in terms]
     if not tree_terms:
         return _EMPTY_I64, _EMPTY_F64
-    ncols = min(len(plan.columns), len(plan.idfs))
-    cols = plan.columns[:ncols]
-    idfs = np.asarray(plan.idfs[:ncols], dtype=np.float64)
+    cols, idfs = scored_columns(plan)
     avg_dl = stats["avg_doc_len"]
     avg_tl = stats["avg_title_len"]
 
@@ -191,20 +185,11 @@ def wand_topk(
             parts.append(d[idx])
         if not parts:
             continue
-        matched = np.unique(np.concatenate(parts))
-        if allowed is not None and matched.size:
-            matched = np.intersect1d(matched, allowed, assume_unique=True)
-        if deleted is not None and matched.size:
-            matched = matched[_membership(deleted, matched) < 0]
+        matched = inp.survivors(np.unique(np.concatenate(parts)))
         if not matched.size:
             continue
-        tfb, tft = tf_matrices(cols, matched, terms)
-        pos = np.searchsorted(chunk.doc_ids, matched)
-        dl = chunk.doc_lens[pos].astype(np.float64)
-        tl = chunk.title_lens[pos].astype(np.float64)
-        score, _, _ = fielded_bm25(
-            idfs, tfb, tft, dl, tl, avg_dl, avg_tl,
-            k1=k1, b=b, title_weight=title_weight,
+        score = bm25_gather(
+            cols, idfs, matched, inp, stats, k1, b, title_weight
         )
         pool_docs = np.concatenate([pool_docs, matched])
         pool_scores = np.concatenate([pool_scores, score])

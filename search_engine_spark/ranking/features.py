@@ -27,9 +27,10 @@ from search_engine_spark.functions.bm25 import fielded_bm25
 from search_engine_spark.query.kernels import (
     ChunkDocs,
     TermChunk,
-    decode_doclens_row,
-    decode_term_row,
     _membership,
+    frame_of,
+    read_chunk,
+    scored_columns,
 )
 from search_engine_spark.query.plan import CompiledQuery
 
@@ -47,18 +48,15 @@ def chunk_features(
     title_weight: float,
 ) -> np.ndarray:
     """(n_cand, 10) feature matrix for candidate docs of one chunk."""
-    ncols = min(len(plan.columns), len(plan.idfs))
-    cols = plan.columns[:ncols]
-    idfs = np.asarray(plan.idfs[:ncols], dtype=np.float64)
+    cols, idfs = scored_columns(plan)
+    ncols = len(cols)
     n = cand.size
     tfb = np.zeros((n, ncols), dtype=np.int64)
     tft = np.zeros((n, ncols), dtype=np.int64)
     fo_body = np.ones((n, ncols), dtype=np.float64)   # sentinel 1.0
     fo_title = np.ones((n, ncols), dtype=np.float64)
 
-    pos_in_chunk = np.searchsorted(chunk.doc_ids, cand)
-    dl = chunk.doc_lens[pos_in_chunk].astype(np.float64)
-    tl = chunk.title_lens[pos_in_chunk].astype(np.float64)
+    dl, tl = chunk.lengths(cand)
 
     for j, col in enumerate(cols):
         if col[0] != "term":
@@ -113,8 +111,8 @@ def make_features_kernel(
     b: float,
     title_weight: float,
 ):
-    """cogroup(postings, doclens ⋈ per-chunk candidates).applyInPandas fn
-    -> FEATURES_SCHEMA.
+    """cogroup(postings, doc lengths ⋈ per-chunk candidates).applyInPandas
+    fn -> FEATURES_SCHEMA.
 
     The right side carries a ``cands`` column (array<struct<qid, doc_id>>,
     broadcast-joined per chunk by ``SearchEngine._feature_scores``) — the
@@ -123,27 +121,25 @@ def make_features_kernel(
     from search_engine_spark.ranking.model import RankingModel
 
     plan_by_qid = {p.qid: p for p in plans}
+    # first-occurrence features need every fetched term's positions
+    pos_terms = {t for p in plans for t in p.fetch_terms}
 
     def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         # left may legitimately be empty: a NOT/scan-all plan's candidates
         # can live in chunks with no postings for the fetch terms — those
         # docs still get scored (zero tf, sentinel 1.0 first-occurrence,
-        # real length features).  Only a missing doclens side is a no-op.
+        # real length features).  Only a missing doc-length side is a
+        # no-op.
         if len(right) == 0:
-            return _empty()
-        row = next(right.itertuples(index=False))
-        chunk = decode_doclens_row(row)
+            return frame_of(FEATURES_SCHEMA, [])
+        inp = read_chunk(left, right, pos_terms)
+        chunk = inp.chunk
         cand_lists: dict[int, list] = {}
-        for s in row.cands:
+        for s in right["cands"].iloc[0]:
             qid, doc = (s["qid"], s["doc_id"]) if isinstance(s, dict) else s
             cand_lists.setdefault(int(qid), []).append(int(doc))
-        terms: dict[str, TermChunk] = {}
-        for prow in left.itertuples(index=False):
-            terms[prow.term] = decode_term_row(
-                prow, need_positions=True, need_blocks=False
-            )
         model = RankingModel(model_weights)
-        out_q, out_d, out_s = [], [], []
+        parts = []
         for qid, cand_list in cand_lists.items():
             cand = np.array(sorted(cand_list), dtype=np.int64)
             # candidates must be docs of THIS chunk; ids outside the
@@ -153,30 +149,14 @@ def make_features_kernel(
             if cand.size == 0:
                 continue
             feats = chunk_features(
-                plan_by_qid[qid], cand, terms, chunk, stats, k1, b,
+                plan_by_qid[qid], cand, inp.terms, chunk, stats, k1, b,
                 title_weight,
             )
-            out_q.append(np.full(cand.size, qid, dtype=np.int32))
-            out_d.append(cand)
-            out_s.append(model.forward(feats))
-        if not out_d:
-            return _empty()
-        return pd.DataFrame(
-            {
-                "qid": np.concatenate(out_q),
-                "doc_id": np.concatenate(out_d),
-                "mlp_score": np.concatenate(out_s),
-            }
-        )
+            parts.append((
+                np.full(cand.size, qid, dtype=np.int32),
+                cand,
+                model.forward(feats),
+            ))
+        return frame_of(FEATURES_SCHEMA, parts)
 
     return kernel
-
-
-def _empty() -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "qid": pd.Series([], dtype="int32"),
-            "doc_id": pd.Series([], dtype="int64"),
-            "mlp_score": pd.Series([], dtype="float64"),
-        }
-    )

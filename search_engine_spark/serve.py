@@ -26,10 +26,10 @@ job-scheduling floor (~0.1 s at 40k docs, ~1.5 s/query at 20M docs
 single-shot vs 0.29 s/query when 64 queries share one ``search_batch``
 cogroup job), so one job per HTTP request caps throughput at
 1/floor regardless of cluster size.  ``_MicroBatcher`` funnels requests
-through a single worker that drains everything queued at the moment it
-becomes free into ONE ``search_batch`` job — zero added latency when
-idle (a lone request is a batch of one), full coalescing under load
-(while a batch runs, arrivals pile up and ride the next one).
+through ``_WORKERS`` workers; each gathers what arrives within a short
+window of its first request into ONE ``search_batch`` job, so a lone
+request waits at most the window, and under load arrivals pile up while
+the workers' jobs run and ride the next wave.
 Per-request results are identical to the solo path: ``search_batch``
 funnels through the same compile/execute pipeline with qid = batch
 position, and a request asking for a smaller k than its batch-mates
@@ -77,39 +77,37 @@ from search_engine_spark.plans.parser import SearchMode
 from search_engine_spark.query.engine import _LRU, SearchEngine
 
 
+# most requests one wave carries
+_MAX_BATCH = 64
+# short gather window after a wave's first request: concurrent clients
+# never hit the queue at the exact same instant, and without the window
+# a worker wakes on the first arrival and runs a batch of 1-2 while the
+# rest are still in flight.  20 ms is noise against the ~0.1 s+ Spark
+# job floor it saves.
+_WINDOW_SEC = 0.02
+# a few workers, not one: a request that arrives just after a wave
+# departs would otherwise wait for that wave's whole job.  Overlapping
+# jobs keep the scheduler fed (Spark job submission is thread-safe).
+# Measured on a 4-core host against the perfbench ``serve`` workload (4
+# closed-loop clients): one worker draining the queue with no window
+# coalesced more (median wave size 1 -> 2) but lost every untraced pair
+# — cold p50 1.36-1.56 s -> 1.63-2.08 s, ops/s 5.3-5.8 -> 4.2-5.1 —
+# because three overlapping jobs finish sooner than one coalesced job.
+_WORKERS = 3
+
+
 class _MicroBatcher:
     """Coalesce concurrent (query, mode, k) requests into one
     ``search_batch`` job per worker wake-up.  A failed wave retries each
     request as a wave of one so one malformed query can't poison its
     batch-mates' responses."""
 
-    def __init__(
-        self,
-        service: "SearchService",
-        max_batch: int = 64,
-        window_sec: float = 0.02,
-        workers: int = 3,
-        cache_size: int = 1024,
-    ):
+    def __init__(self, service: "SearchService", cache_size: int = 1024):
         self._service = service
-        self._max_batch = max_batch
         # (query, mode) -> (k_computed, rank-ordered rows); sound for the
         # service lifetime because the engine's index view is pinned at
         # open — see the module docstring.  0 disables.
         self._results = _LRU(cache_size)
-        # a few workers, not one: a request that arrives just after a
-        # batch departs would otherwise serialize behind that batch's
-        # whole job.  2-3 overlapping batch jobs keep the scheduler fed
-        # (Spark job submission is thread-safe) while each job still
-        # amortizes its floor over everything queued at its wake-up.
-        self._workers = workers
-        # short gather window after the first request: concurrent clients
-        # never hit the queue at the exact same instant, and without the
-        # window the worker wakes on the first arrival and runs a batch
-        # of 1-2 while the rest are still in-flight — fragmenting what
-        # should be one job into several.  20 ms is noise against the
-        # ~0.1 s+ Spark job floor it saves.
-        self._window_sec = window_sec
         self._q: _queue.Queue = _queue.Queue()
         self._start_lock = threading.Lock()
         self._thread: threading.Thread | None = None
@@ -142,7 +140,7 @@ class _MicroBatcher:
                 if self._thread is None:
                     ts = [
                         threading.Thread(target=self._loop, daemon=True)
-                        for _ in range(self._workers)
+                        for _ in range(_WORKERS)
                     ]
                     for t in ts:
                         t.start()
@@ -157,8 +155,8 @@ class _MicroBatcher:
             # gather until the window closes or the batch is full; while
             # a batch's job runs, later arrivals pile up and are drained
             # instantly at the next wake-up
-            deadline = time.time() + self._window_sec
-            while len(batch) < self._max_batch:
+            deadline = time.time() + _WINDOW_SEC
+            while len(batch) < _MAX_BATCH:
                 remaining = deadline - time.time()
                 if remaining <= 0:
                     break

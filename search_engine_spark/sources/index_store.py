@@ -13,13 +13,13 @@ manifest would give us):
 ``docs/``        doc_id, repo, path, commit, lang, sha256 — append-only
                  files of dense doc_id ranges; the query side's doc-info
                  lookup (``doc_info_for``) is a driver-side pyarrow read
-``doclens/batch=K/``  chunk_id, n_docs, doc_ids(bin), doc_lens(bin),
-    title_lens(bin) — copied from the reserved-term "" rows the posting
-    merge emits (single tokenize pass; build/kernels.py)
 ``postings/batch=K/bucket=B/``  term, chunk_id, df, doc_ids(bin),
     tfs_body(bin), tfs_title(bin), pos_body(bin), pos_title(bin),
     blk_last_doc(bin), blk_max_tfb(bin), blk_max_tft(bin),
-    blk_min_dl(bin), blk_min_tl(bin)
+    blk_min_dl(bin), blk_min_tl(bin).  Each chunk's doc lengths are its
+    reserved-term "" row (df = doc count, tfs_body/tfs_title = doc/title
+    lengths), emitted by the posting merge from the single tokenize pass
+    (build/kernels.py) and read back by ``read_doclens``
 ``term_stats/bucket=B/``  term, df, n_chunks   (finalize artifact)
 ``stats/``       num_docs, avg_doc_len, avg_title_len, max_doc_len,
                  max_title_len, total_postings, sum_doc_len,
@@ -163,9 +163,6 @@ class IndexStore:
     def postings_batch_path(self, batch_id: int) -> str:
         return str(self.dir / "postings" / f"batch={batch_id}")
 
-    def doclens_batch_path(self, batch_id: int) -> str:
-        return str(self.dir / "doclens" / f"batch={batch_id}")
-
     @property
     def tombstones_path(self) -> str:
         return str(self.dir / "tombstones")
@@ -290,12 +287,36 @@ class IndexStore:
         ).drop("batch")
 
     def read_doclens(self, batches: list[int] | None = None) -> DataFrame:
-        if batches is None:
-            batches = self.committed_batches()
-        paths = [self.doclens_batch_path(b) for b in batches]
-        return self.spark.read.option("basePath", str(self.dir / "doclens")).parquet(
-            *paths
-        ).drop("batch")
+        """Per-chunk doc data -> (chunk_id, n_docs, doc_ids, doc_lens,
+        title_lens): the postings' reserved-term "" rows, pruned to their
+        one bucket partition (the index keeps no second copy)."""
+        bucket = term_bucket("", self.config.n_term_buckets)
+        return (
+            self.read_postings(batches)
+            .where((F.col("bucket") == bucket) & (F.col("term") == ""))
+            .select(
+                "chunk_id",
+                F.col("df").alias("n_docs"),
+                "doc_ids",
+                F.col("tfs_body").alias("doc_lens"),
+                F.col("tfs_title").alias("title_lens"),
+            )
+        )
+
+    def chunk_of(self):
+        """The chunk id of the ``doc_id`` column."""
+        return F.floor(F.col("doc_id") / self.config.chunk_docs).cast("long")
+
+    def ids_by_chunk(self, ids: DataFrame, name: str) -> DataFrame:
+        """(chunk_id, ``name``): the ``doc_id``s of ``ids`` as one sorted
+        array per chunk — the tombstone and filter arrays the chunk
+        kernels and the purge read.  O(touched chunks) rows, each array
+        bounded by ``chunk_docs``."""
+        return (
+            ids.select(self.chunk_of().alias("chunk_id"), "doc_id")
+            .groupBy("chunk_id")
+            .agg(F.sort_array(F.collect_list("doc_id")).alias(name))
+        )
 
     def read_docs(self) -> DataFrame:
         return self.spark.read.parquet(self.docs_path)
@@ -330,7 +351,7 @@ class IndexStore:
     def read_doc_lens(self, batches: list[int] | None = None) -> DataFrame:
         """Decoded per-doc token lengths -> (doc_id, doc_len, title_len).
         ``batches`` restricts to specific lineage batches (an increment's
-        O(increment) doclens instead of the whole index)."""
+        O(increment) doc lengths instead of the whole index)."""
 
         def decode(batches):
             import pandas as pd

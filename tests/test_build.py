@@ -121,6 +121,30 @@ def test_doclens_and_stats(built):
         assert tl == oracle.title_lengths[d]
 
 
+def test_doclens_are_the_postings_reserved_term_rows(built):
+    """Doc lengths have one home: the build writes no doclens/ copy, and
+    read_doclens projects the postings' "" rows with the columns and
+    types the copy had."""
+    import os
+
+    _rows, builder, _stats = built
+    store = builder.store
+    assert not os.path.exists(os.path.join(store.dir, "doclens"))
+    doclens = store.read_doclens()
+    assert [(f.name, f.dataType.simpleString()) for f in doclens.schema] == [
+        ("chunk_id", "bigint"), ("n_docs", "int"), ("doc_ids", "binary"),
+        ("doc_lens", "binary"), ("title_lens", "binary"),
+    ]
+    got = sorted(tuple(bytes(c) if isinstance(c, bytearray) else c
+                       for c in r) for r in doclens.collect())
+    want = sorted(
+        (r.chunk_id, r.df, bytes(r.doc_ids), bytes(r.tfs_body),
+         bytes(r.tfs_title))
+        for r in store.read_postings().where(F.col("term") == "").collect()
+    )
+    assert got == want and len(got) == 3  # 150 docs / 64-doc chunks
+
+
 def test_term_stats(built):
     rows, builder, _ = built
     oracle = RefSemIndex(corpus_to_tokens(rows))

@@ -80,9 +80,26 @@ def test_compact_preserves_results_and_collapses_batches(built, spark):
     # old dirs still on disk until vacuum; invisible to readers
     assert len(_batch_dirs(index_dir, "postings")) == len(before_batches) + 1
     removed = builder.vacuum()["removed_dirs"]
-    assert len(removed) == 2 * len(before_batches)
+    assert len(removed) == len(before_batches)
     assert _batch_dirs(index_dir, "postings") == [f"batch={out['batch_id']}"]
-    assert _batch_dirs(index_dir, "doclens") == [f"batch={out['batch_id']}"]
+    assert _results(spark, index_dir) == before
+
+
+def test_vacuum_removes_legacy_doclens_copies(built, spark):
+    """Indexes built before doc lengths were read from the postings' ""
+    rows kept a doclens/batch=K copy per batch.  Such an index still
+    opens (nothing reads the copies) and vacuum drops the copy of a
+    batch no lineage row references, like that batch's postings."""
+    builder, index_dir = built
+    before = _results(spark, index_dir)
+    (live,) = builder.store.committed_batches()  # compacted above
+    stale = os.path.join(index_dir, "doclens", "batch=0")
+    kept = os.path.join(index_dir, "doclens", f"batch={live}")
+    builder.store.read_doclens().write.parquet(stale)
+    builder.store.read_doclens().write.parquet(kept)
+    assert _results(spark, index_dir) == before
+    assert builder.vacuum()["removed_dirs"] == [stale]
+    assert _batch_dirs(index_dir, "doclens") == [f"batch={live}"]
     assert _results(spark, index_dir) == before
 
 
@@ -136,6 +153,8 @@ def test_compaction_of_streamed_increments(spark, tmp_path):
     arrive(waves[0])
     arrive(waves[1])
     assert len(indexer.builder.store.committed_batches()) == 2
+    # doc lengths live in the postings' "" rows only
+    assert not os.path.exists(os.path.join(index_dir, "doclens"))
 
     first = indexer.builder.compact()
     assert first["compacted"]
@@ -164,6 +183,7 @@ def test_compaction_of_streamed_increments(spark, tmp_path):
     assert _batch_dirs(index_dir, "postings") == [
         f"batch={second['batch_id']}"
     ]
+    assert not os.path.exists(os.path.join(index_dir, "doclens"))
     assert _results(spark, index_dir) == want
 
 

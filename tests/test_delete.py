@@ -105,6 +105,57 @@ def test_facets_exclude_deleted(built, spark):
     assert got == {(k, v) for k, v in want.items()}
 
 
+def test_filter_and_tombstones_in_one_chunk(built, spark):
+    """A doc_filter that keeps deleted and live docs of the same chunk:
+    the kernels see both per-chunk arrays at once.  Search (WAND on and
+    off) and facets must equal the unfiltered results restricted to the
+    live docs that pass."""
+    _b, index_dir, _c, _base, victims = built
+    eng = SearchEngine(spark, index_dir, CFG)
+    # shard_2 adds live matches beside the deleted zqmerge/zqshard docs
+    probes = [
+        ("zqmerge zqshard shard_2", SearchMode.OR),
+        ("shard_2 OR ( zqmerge AND zqshard )", SearchMode.QUERY_EVALUATOR),
+    ]
+    unfiltered = _rows(eng, probes)
+    hits = sorted({d for _q, d, _s in unfiltered})
+    # a chunk holding a deleted doc and live matches; the filter keeps
+    # the chunk's deleted docs and every other live match
+    chunk = next(
+        v // CFG.chunk_docs for v in victims
+        if any(d // CFG.chunk_docs == v // CFG.chunk_docs for d in hits)
+    )
+    in_chunk = [d for d in hits if d // CFG.chunk_docs == chunk]
+    keep = sorted(
+        {v for v in victims if v // CFG.chunk_docs == chunk}
+        | set(in_chunk[::2])
+    )
+    pred = F.col("doc_id").isin(keep)
+    want = [r for r in unfiltered if r[1] in keep]
+    assert want and set(keep) & set(victims)
+    for use_wand in (True, False):
+        got = sorted(
+            (r.qid, r.doc_id, round(r.score, 9))
+            for qid, (q, m) in enumerate(probes)
+            for r in eng.search(
+                q, m, num_return=K, use_wand=use_wand, doc_filter=pred
+            ).withColumn("qid", F.lit(qid)).collect()
+        )
+        assert got == want, use_wand
+
+    langs = {
+        r.doc_id: r.lang
+        for r in eng.docs.select("doc_id", "lang").collect()
+    }
+    q, m = probes[0]
+    tally: dict[str, int] = {}
+    for qid, d, _s in want:
+        if qid == 0:
+            tally[langs[d]] = tally.get(langs[d], 0) + 1
+    facets = eng.facet_counts(q, m, doc_filter=pred).collect()
+    assert {(r.value, r.n_docs) for r in facets} == set(tally.items())
+
+
 def test_delete_where_predicate(built, spark):
     builder, index_dir, _c, _base, _v = built
     n_md = builder.store.read_docs().where(F.col("lang") == "md").count()
