@@ -124,8 +124,9 @@ class IndexBuilder:
             .parquet(self.store.docs_path)
         )
         # id-assignment integrity: duplicated/dropped ids would silently
-        # corrupt every downstream posting (see assign_doc_ids docstring)
-        n_out = self.store.read_docs().count()
+        # corrupt every downstream posting (see assign_doc_ids docstring);
+        # the written files' footers hold the count, so no Spark job
+        n_out = self.store.parquet_rows(self.store.docs_path)
         if n_out != n_in:
             raise RuntimeError(
                 f"doc-id assignment corrupted: {n_in} corpus rows -> "
@@ -149,7 +150,6 @@ class IndexBuilder:
         corpus: DataFrame,
         resume: bool = True,
         max_batches: int | None = None,
-        concurrency: int | None = None,
     ) -> list[dict]:
         """Runs all (remaining) batches; returns per-batch metric dicts.
 
@@ -188,7 +188,7 @@ class IndexBuilder:
         ]
         if max_batches is not None:
             todo = todo[:max_batches]
-        conc = max(1, int(concurrency or cfg.build_concurrency))
+        conc = max(1, cfg.build_concurrency)
         if conc == 1 or len(todo) <= 1:
             return [
                 self._run_batch(corpus, docs, bounds[b], b, fc, lc)
@@ -713,23 +713,23 @@ class IndexBuilder:
 
     def vacuum(self) -> dict:
         """Delete batch dirs no committed lineage row references —
-        pre-compaction data and crash-orphaned writes.  Run only while no
-        build/ingest is in flight (an uncommitted in-progress batch looks
-        identical to an orphan)."""
+        pre-compaction data and crash-orphaned writes — and the
+        ``doclens/`` copies of doc lengths older indexes wrote, which no
+        reader opens.  Run only while no build/ingest is in flight (an
+        uncommitted in-progress batch looks identical to an orphan)."""
         keep = set(self.store.committed_batches())
         removed = []
-        # doclens/: per-batch doc-length copies older indexes wrote; no
-        # reader opens them, and each goes when its batch does
-        for sub in ("postings", "doclens"):
-            base = self.store.dir / sub
-            if not base.is_dir():
+        base = self.store.dir / "postings"
+        for d in base.iterdir() if base.is_dir() else ():
+            if not d.name.startswith("batch="):
                 continue
-            for d in base.iterdir():
-                if not d.name.startswith("batch="):
-                    continue
-                if int(d.name.split("=", 1)[1]) not in keep:
-                    shutil.rmtree(str(d))
-                    removed.append(str(d))
+            if int(d.name.split("=", 1)[1]) not in keep:
+                shutil.rmtree(str(d))
+                removed.append(str(d))
+        legacy = self.store.dir / "doclens"
+        if legacy.is_dir():
+            shutil.rmtree(str(legacy))
+            removed.append(str(legacy))
         return {"removed_dirs": removed}
 
     def verify_corpus(self, corpus: DataFrame) -> dict:
@@ -773,10 +773,9 @@ class IndexBuilder:
         corpus: DataFrame,
         resume: bool = True,
         trigrams: bool = False,
-        concurrency: int | None = None,
     ) -> dict:
         self.build_docs(corpus)
-        self.build_postings(corpus, resume=resume, concurrency=concurrency)
+        self.build_postings(corpus, resume=resume)
         stats = self.finalize()
         if trigrams:
             self.build_trigrams()

@@ -3,13 +3,14 @@
 ``extract_partials``: one pass over an Arrow batch of documents →
 per-``(term, chunk)`` partial posting rows (numpy lexsort/segment
 reduction — no per-row Python beyond the regex tokenizer call itself,
-which is inherently per-document).
+which is inherently per-document), each chunk's reserved-term ``""`` row
+included.
 
-``merge_groups_vectorized`` / ``make_merge_stream_fn``: after the
-repartition-by-(term, chunk) shuffle, sorted Arrow batches are merged in
-one vectorized pass per batch — a single group-major lexsort, a single
-varbyte encode per column (byte-split per group), and
-``np.{maximum,minimum}.reduceat`` block metadata.
+``make_merge_stream_fn``: after the repartition-by-(term, chunk) shuffle,
+sorted Arrow batches are merged in one vectorized pass per batch by the
+row encoder of ``functions/codec.py`` (``merge_groups_vectorized``), the
+one owner of the postings row format; ``make_purge_fn`` decodes and
+re-encodes rows through the same module.
 
 This pair is the Spark-native replacement for the reference's SPIMI block
 flush + two-stage k-way merge (``ingestion.py:63-171, 335-586, 941-981``):
@@ -25,7 +26,15 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
+from search_engine_spark.functions.codec import (
+    decode_term_row,
+    merge_groups_vectorized,
+)
 from search_engine_spark.functions.tokenizer import get_tokenizer
+from search_engine_spark.sources.index_store import (
+    PARTIALS_SCHEMA,
+    POSTINGS_SCHEMA,
+)
 
 
 def _flatten_token_lists(token_lists: list[list[str]]):
@@ -154,22 +163,6 @@ def extract_partials_batch(
     return pd.DataFrame(out)
 
 
-def _empty_partials() -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "term": pd.Series([], dtype=object),
-            "chunk_id": pd.Series([], dtype="int64"),
-            "doc_ids": pd.Series([], dtype=object),
-            "tfs_body": pd.Series([], dtype=object),
-            "tfs_title": pd.Series([], dtype=object),
-            "pos_body": pd.Series([], dtype=object),
-            "pos_title": pd.Series([], dtype=object),
-            "doc_lens": pd.Series([], dtype=object),
-            "title_lens": pd.Series([], dtype=object),
-        }
-    )
-
-
 def make_partials_mapper(tokenizer_name: str, chunk_docs: int):
     """mapInPandas function: documents(doc_id, title, body) -> PARTIALS_SCHEMA."""
 
@@ -186,166 +179,6 @@ def make_partials_mapper(tokenizer_name: str, chunk_docs: int):
     return mapper
 
 
-def _excl_cumsum(x: np.ndarray) -> np.ndarray:
-    out = np.zeros(x.size, dtype=np.int64)
-    if x.size > 1:
-        np.cumsum(x[:-1], out=out[1:])
-    return out
-
-
-def _gather_slices(
-    starts: np.ndarray, counts: np.ndarray
-) -> np.ndarray:
-    """Flat gather indices for variable-length slices [starts_i,
-    starts_i+counts_i)."""
-    total = int(counts.sum())
-    if total == 0:
-        return np.empty(0, dtype=np.int64)
-    out_starts = _excl_cumsum(counts)
-    return (
-        np.arange(total, dtype=np.int64)
-        - np.repeat(out_starts, counts)
-        + np.repeat(starts, counts)
-    )
-
-
-def merge_groups_vectorized(
-    cols: dict[str, np.ndarray],
-    g_row_starts: np.ndarray,
-    g_row_ends: np.ndarray,
-    block_docs: int,
-    n_buckets: int,
-    skip_positions: bool = False,
-) -> pd.DataFrame:
-    """Merge + encode MANY complete (term, chunk) groups in one vectorized
-    pass: a single group-major lexsort orders every posting, a single
-    varbyte encode per column covers all groups (``vb_encode_segments``),
-    and block metadata comes from ``np.{maximum,minimum}.reduceat`` over
-    global block boundaries.  Per-group Python is reduced to byte-slicing
-    and the crc32 bucket of the term."""
-    from search_engine_spark.functions.codec import (
-        delta_with_resets,
-        vb_encode_segments,
-    )
-    from search_engine_spark.sources.index_store import term_bucket
-
-    n_groups = g_row_starts.size
-    # restrict to the covered (contiguous) row span — the caller may hold
-    # back trailing carry rows
-    lo, hi = int(g_row_starts[0]), int(g_row_ends[-1])
-    if lo != 0 or hi != len(cols["doc_ids"]):
-        cols = {c: v[lo:hi] for c, v in cols.items()}
-        g_row_starts = g_row_starts - lo
-        g_row_ends = g_row_ends - lo
-    row_lens = np.fromiter(
-        (len(x) for x in cols["doc_ids"]), dtype=np.int64,
-        count=len(cols["doc_ids"]),
-    )
-    # rows -> flat posting entries
-    docs = np.concatenate([np.asarray(x, np.int64) for x in cols["doc_ids"]])
-    tfb = np.concatenate([np.asarray(x, np.int64) for x in cols["tfs_body"]])
-    tft = np.concatenate([np.asarray(x, np.int64) for x in cols["tfs_title"]])
-    dls = np.concatenate([np.asarray(x, np.int64) for x in cols["doc_lens"]])
-    tls = np.concatenate([np.asarray(x, np.int64) for x in cols["title_lens"]])
-    pos_b = (
-        np.concatenate([np.asarray(x, np.int64) for x in cols["pos_body"]])
-        if len(cols["pos_body"]) else np.empty(0, np.int64)
-    )
-    pos_t = (
-        np.concatenate([np.asarray(x, np.int64) for x in cols["pos_title"]])
-        if len(cols["pos_title"]) else np.empty(0, np.int64)
-    )
-
-    # entries per group via prefix sums over row lengths
-    row_cum = np.concatenate(([0], np.cumsum(row_lens)))
-    g_sizes = row_cum[g_row_ends] - row_cum[g_row_starts]
-    gid = np.repeat(np.arange(n_groups, dtype=np.int64), g_sizes)
-    # doc-sort within each group (group-major overall); docs unique per group
-    order = np.lexsort((docs, gid))
-    docs_s, tfb_s, tft_s = docs[order], tfb[order], tft[order]
-    dls_s, tls_s = dls[order], tls[order]
-
-    # positions: pos arrays are doc-entry-major already, so slice starts are
-    # the exclusive cumsum of tf; gather them into sorted order
-    def sort_positions(pos_flat: np.ndarray, tf_flat: np.ndarray, tf_sorted):
-        starts = _excl_cumsum(tf_flat)
-        return pos_flat[_gather_slices(starts[order], tf_sorted)]
-
-    if skip_positions:  # doclens pseudo-groups: "tf" is a length, no pos
-        pos_b_s = np.empty(0, np.int64)
-        pos_t_s = np.empty(0, np.int64)
-    else:
-        pos_b_s = sort_positions(pos_b, tfb, tfb_s)
-        pos_t_s = sort_positions(pos_t, tft, tft_s)
-
-    g_starts = _excl_cumsum(g_sizes)  # entry-space group starts
-
-    # ---- encode postings (one pass each, byte-split per group)
-    doc_bytes = vb_encode_segments(delta_with_resets(docs_s, g_starts), g_starts)
-    tfb_bytes = vb_encode_segments(tfb_s.astype(np.uint64), g_starts)
-    tft_bytes = vb_encode_segments(tft_s.astype(np.uint64), g_starts)
-
-    def pos_bytes_of(pos_s: np.ndarray, tf_s: np.ndarray) -> list[bytes]:
-        if pos_s.size == 0:
-            return [b""] * n_groups
-        doc_pos_starts = _excl_cumsum(tf_s)[tf_s > 0]
-        d = np.diff(pos_s, prepend=-1)
-        d[doc_pos_starts] = pos_s[doc_pos_starts] + 1
-        g_pos_starts = np.concatenate(([0], np.cumsum(tf_s)))[g_starts]
-        return vb_encode_segments(d.astype(np.uint64), g_pos_starts)
-
-    pos_b_bytes = pos_bytes_of(pos_b_s, tfb_s)
-    pos_t_bytes = pos_bytes_of(pos_t_s, tft_s)
-
-    # ---- block metadata (global reduceat over per-group block grid)
-    nb_g = (g_sizes + block_docs - 1) // block_docs
-    total_b = int(nb_g.sum())
-    b_gstart = _excl_cumsum(nb_g)  # block-space group starts
-    local_b = np.arange(total_b, dtype=np.int64) - np.repeat(b_gstart, nb_g)
-    bstarts = np.repeat(g_starts, nb_g) + local_b * block_docs
-    g_ends_entries = g_starts + g_sizes
-    blast_idx = np.minimum(
-        bstarts + block_docs, np.repeat(g_ends_entries, nb_g)
-    ) - 1
-    blk_last = docs_s[blast_idx]
-    blk_max_tfb = np.maximum.reduceat(tfb_s, bstarts) if total_b else np.empty(0, np.int64)
-    blk_max_tft = np.maximum.reduceat(tft_s, bstarts) if total_b else np.empty(0, np.int64)
-    blk_min_dl = np.minimum.reduceat(dls_s, bstarts) if total_b else np.empty(0, np.int64)
-    blk_min_tl = np.minimum.reduceat(tls_s, bstarts) if total_b else np.empty(0, np.int64)
-
-    blk_last_bytes = vb_encode_segments(
-        delta_with_resets(blk_last, b_gstart), b_gstart
-    )
-    blk_max_tfb_b = vb_encode_segments(blk_max_tfb.astype(np.uint64), b_gstart)
-    blk_max_tft_b = vb_encode_segments(blk_max_tft.astype(np.uint64), b_gstart)
-    blk_min_dl_b = vb_encode_segments(blk_min_dl.astype(np.uint64), b_gstart)
-    blk_min_tl_b = vb_encode_segments(blk_min_tl.astype(np.uint64), b_gstart)
-
-    terms = [cols["term"][s] for s in g_row_starts.tolist()]
-    return pd.DataFrame(
-        {
-            "term": terms,
-            "chunk_id": [
-                int(cols["chunk_id"][s]) for s in g_row_starts.tolist()
-            ],
-            "df": g_sizes.astype(np.int32),
-            "doc_ids": doc_bytes,
-            "tfs_body": tfb_bytes,
-            "tfs_title": tft_bytes,
-            "pos_body": pos_b_bytes,
-            "pos_title": pos_t_bytes,
-            "blk_last_doc": blk_last_bytes,
-            "blk_max_tfb": blk_max_tfb_b,
-            "blk_max_tft": blk_max_tft_b,
-            "blk_min_dl": blk_min_dl_b,
-            "blk_min_tl": blk_min_tl_b,
-            "bucket": np.array(
-                [term_bucket(t, n_buckets) for t in terms], dtype=np.int32
-            ),
-        }
-    )
-
-
 def make_purge_fn(block_docs: int, n_buckets: int):
     """cogroup(postings-by-chunk, tombstones-by-chunk).applyInPandas
     function physically removing deleted docs from one chunk's posting
@@ -355,22 +188,12 @@ def make_purge_fn(block_docs: int, n_buckets: int):
     Costs are deletion-proportional at three levels: the builder routes
     only *touched* chunks here (untouched chunks never shuffle through
     Python), a row whose docs are all survivors passes through
-    **byte-identical** (no decode), and only rows actually containing a
-    deleted doc are re-encoded (positions re-sliced, block maxima
-    recomputed via :func:`merge_groups_vectorized`).  Rows whose docs are
-    all deleted are dropped — including the reserved-term ``""`` doclens
-    row when an entire chunk dies."""
-    from search_engine_spark.functions.codec import (
-        decode_positions,
-        delta_decode_docs,
-        vb_decode,
-    )
-
-    cols_order = [
-        "term", "chunk_id", "df", "doc_ids", "tfs_body", "tfs_title",
-        "pos_body", "pos_title", "blk_last_doc", "blk_max_tfb",
-        "blk_max_tft", "blk_min_dl", "blk_min_tl", "bucket",
-    ]
+    **byte-identical**, and only rows actually containing a deleted doc
+    are re-encoded, in one :func:`merge_groups_vectorized` call (their
+    block lengths come from the chunk's ``""`` row).  Rows whose docs are
+    all deleted are dropped — including the ``""`` row when an entire
+    chunk dies."""
+    cols_order = POSTINGS_SCHEMA.fieldNames()
 
     def purge(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if len(left) == 0:
@@ -380,84 +203,33 @@ def make_purge_fn(block_docs: int, n_buckets: int):
         deleted = np.sort(
             np.asarray(right.iloc[0]["deleted_ids"], dtype=np.int64)
         )
-        # per-doc lengths for block-min recompute come from the chunk's
-        # reserved-term "" row (lengths ride the tf columns there)
-        dl_mask = left["term"] == ""
-        dl_rows = left[dl_mask]
-        chunk_ids = dls = tls = None
-        if len(dl_rows):
-            r0 = next(dl_rows.itertuples(index=False))
-            chunk_ids = delta_decode_docs(r0.doc_ids)
-            dls = vb_decode(r0.tfs_body).astype(np.int64)
-            tls = vb_decode(r0.tfs_title).astype(np.int64)
-
-        passthrough_idx: list[int] = []
-        rebuilt = {k: [] for k in (
-            "term", "chunk_id", "doc_ids", "tfs_body", "tfs_title",
-            "pos_body", "pos_title", "doc_lens", "title_lens",
-        )}
-        n_dl_rebuilt = 0
-        for i, row in enumerate(left.itertuples(index=False)):
-            docs = delta_decode_docs(row.doc_ids)
-            keep = ~np.isin(docs, deleted)
+        rows = list(left.itertuples(index=False))
+        decoded = [decode_term_row(r, False, False) for r in rows]
+        lens = next(tc for r, tc in zip(rows, decoded) if r.term == "")
+        passthrough: list[int] = []
+        rebuilt = {c: [] for c in PARTIALS_SCHEMA.fieldNames()}
+        for i, (row, tc) in enumerate(zip(rows, decoded)):
+            keep = ~np.isin(tc.docs, deleted)
             if keep.all():
-                passthrough_idx.append(i)
+                passthrough.append(i)
                 continue
             if not keep.any():
                 continue  # every doc deleted -> drop the row
-            is_dl = row.term == ""
-            tfb = vb_decode(row.tfs_body).astype(np.int64)
-            tft = vb_decode(row.tfs_title).astype(np.int64)
-            if is_dl:
-                pb = pt = np.empty(0, dtype=np.int64)
-            else:
-                pb_flat = decode_positions(row.pos_body, tfb)
-                pt_flat = decode_positions(row.pos_title, tft)
-                pb = pb_flat[_gather_slices(_excl_cumsum(tfb)[keep], tfb[keep])]
-                pt = pt_flat[_gather_slices(_excl_cumsum(tft)[keep], tft[keep])]
-            kept_docs = docs[keep]
-            if is_dl:
-                kdl, ktl = tfb[keep], tft[keep]  # lengths ride tf cols
-            else:
-                lk = np.searchsorted(chunk_ids, kept_docs)
-                kdl, ktl = dls[lk], tls[lk]
-            # doclens rows must sort first so the two merge calls below
-            # can split on a contiguous prefix, mirroring the build merge
-            target = 0 if is_dl else len(rebuilt["term"])
-            n_dl_rebuilt += int(is_dl)
-            for k, v in (
-                ("term", row.term), ("chunk_id", int(row.chunk_id)),
-                ("doc_ids", kept_docs), ("tfs_body", tfb[keep]),
-                ("tfs_title", tft[keep]), ("pos_body", pb),
-                ("pos_title", pt), ("doc_lens", kdl), ("title_lens", ktl),
-            ):
-                rebuilt[k].insert(target, v)
+            kept = decode_term_row(row, True, False).select(keep)
+            at = np.searchsorted(lens.docs, kept.docs)
+            for c, v in zip(rebuilt, (
+                row.term, row.chunk_id, kept.docs, kept.tfb, kept.tft,
+                kept.pos_body, kept.pos_title, lens.tfb[at], lens.tft[at],
+            )):
+                rebuilt[c].append(v)
 
-        frames = []
-        if passthrough_idx:
-            frames.append(left.iloc[passthrough_idx][cols_order])
-        n_rb = len(rebuilt["term"])
-        if n_rb:
-            cols = {k: np.asarray(v, dtype=object) for k, v in rebuilt.items()}
-            cols["chunk_id"] = np.asarray(rebuilt["chunk_id"], dtype=np.int64)
-            starts = np.arange(n_rb, dtype=np.int64)
-            ends = starts + 1
-            if n_dl_rebuilt:
-                frames.append(
-                    merge_groups_vectorized(
-                        cols, starts[:n_dl_rebuilt], ends[:n_dl_rebuilt],
-                        block_docs, n_buckets, skip_positions=True,
-                    )[cols_order]
-                )
-            if n_rb > n_dl_rebuilt:
-                frames.append(
-                    merge_groups_vectorized(
-                        cols, starts[n_dl_rebuilt:], ends[n_dl_rebuilt:],
-                        block_docs, n_buckets,
-                    )[cols_order]
-                )
-        if not frames:
-            return pd.DataFrame({c: [] for c in cols_order})
+        frames = [left.iloc[passthrough][cols_order]]
+        if rebuilt["term"]:
+            n = len(rebuilt["term"])
+            frames.append(merge_groups_vectorized(
+                rebuilt, np.arange(n), np.arange(1, n + 1), block_docs,
+                n_buckets,
+            ))
         return pd.concat(frames, ignore_index=True)
 
     return purge
@@ -478,28 +250,9 @@ def make_merge_stream_fn(block_docs: int, n_buckets: int):
         carry: dict | None = None  # columns of the unfinished trailing group
 
         def run(cols: dict, starts: np.ndarray, ends: np.ndarray):
-            # reserved-term "" doclens groups sort first (contiguous
-            # prefix) and carry lengths, not positions
-            first_terms = np.array(
-                [cols["term"][s] for s in starts.tolist()], dtype=object
+            return merge_groups_vectorized(
+                cols, starts, ends, block_docs, n_buckets
             )
-            is_dl = first_terms == ""
-            frames = []
-            if is_dl.any():
-                frames.append(
-                    merge_groups_vectorized(
-                        cols, starts[is_dl], ends[is_dl], block_docs,
-                        n_buckets, skip_positions=True,
-                    )
-                )
-            if (~is_dl).any():
-                frames.append(
-                    merge_groups_vectorized(
-                        cols, starts[~is_dl], ends[~is_dl], block_docs,
-                        n_buckets,
-                    )
-                )
-            return pd.concat(frames, ignore_index=True)
 
         for pdf in batches:
             if len(pdf) == 0:

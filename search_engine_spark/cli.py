@@ -64,6 +64,7 @@ def cmd_build(args: argparse.Namespace) -> None:
         chunks_per_batch=args.chunks_per_batch,
         n_term_buckets=args.term_buckets,
         idf_threshold=args.idf_threshold,
+        build_concurrency=args.build_concurrency,
     )
     from search_engine_spark.sources.corpus import load_corpus
 
@@ -75,7 +76,6 @@ def cmd_build(args: argparse.Namespace) -> None:
         corpus,
         resume=not args.no_resume,
         max_batches=args.max_batches,
-        concurrency=args.build_concurrency,
     )
     stats = builder.finalize()
     if args.trigrams:

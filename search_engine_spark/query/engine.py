@@ -25,7 +25,6 @@ from __future__ import annotations
 
 import os
 import threading
-from collections import OrderedDict
 
 from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
@@ -37,40 +36,11 @@ from search_engine_spark.plans.parser import SearchMode
 from search_engine_spark.query.kernels import RESULT_SCHEMA, make_query_kernel
 from search_engine_spark.query.plan import CompiledQuery, EMPTY, compile_query
 from search_engine_spark.sources.index_store import (
+    _LRU,
     DOC_INFO_COLS,
     IndexStore,
     term_bucket,
 )
-
-
-class _LRU:
-    """Thread-safe map bounded to ``size`` entries, evicting the least
-    recently read or written; size 0 stores nothing."""
-
-    def __init__(self, size: int):
-        self._size = size
-        self._d: OrderedDict = OrderedDict()
-        self._lock = threading.Lock()
-
-    def get_many(self, keys) -> dict:
-        """The cached subset of ``keys``; each hit becomes most recent."""
-        with self._lock:
-            out = {}
-            for k in keys:
-                if k in self._d:
-                    self._d.move_to_end(k)
-                    out[k] = self._d[k]
-            return out
-
-    def put_many(self, items: dict) -> None:
-        if not self._size:
-            return
-        with self._lock:
-            for k, v in items.items():
-                self._d[k] = v
-                self._d.move_to_end(k)
-            while len(self._d) > self._size:
-                self._d.popitem(last=False)
 
 
 def _apply_per_qid_limit(

@@ -2,12 +2,12 @@
 
 One kernel invocation handles one doc-range chunk: it receives the chunk's
 posting rows for every term any active query needs (left side of a
-``cogroup``) plus the chunk's doc-length row (right side), decodes the
-delta+varbyte columns, evaluates each compiled query's set-algebra tree,
-builds the per-column tf matrices, scores with fielded BM25 and emits the
-chunk-local top-``num_candidates`` rows.  Chunks are doc-range-disjoint, so
-AND/OR/NOT/phrase and top-k all decompose per chunk exactly; the global
-top-k is a cheap second-stage reduce in Spark.
+``cogroup``) plus the chunk's doc-length row (right side), decodes them
+through ``functions/codec.py``, evaluates each compiled query's
+set-algebra tree, builds the per-column tf matrices, scores with fielded
+BM25 and emits the chunk-local top-``num_candidates`` rows.  Chunks are
+doc-range-disjoint, so AND/OR/NOT/phrase and top-k all decompose per
+chunk exactly; the global top-k is a cheap second-stage reduce in Spark.
 
 The heap-based k-way merge of the reference
 (``/root/reference/search_engine/inverted_index.py:227-533``) becomes
@@ -27,9 +27,10 @@ import pandas as pd
 
 from search_engine_spark.functions.bm25 import fielded_bm25
 from search_engine_spark.functions.codec import (
-    decode_positions,
-    delta_decode_docs,
-    vb_decode,
+    ChunkDocs,
+    TermChunk,
+    decode_doclens_row,
+    decode_term_row,
 )
 from search_engine_spark.query.plan import (
     ALL,
@@ -45,60 +46,6 @@ from search_engine_spark.query.plan import (
 _POS_KEY_SHIFT = np.int64(1) << np.int64(32)
 
 RESULT_SCHEMA = "qid int, doc_id long, score double"
-
-
-@dataclass
-class TermChunk:
-    docs: np.ndarray          # int64, ascending
-    tfb: np.ndarray           # int64
-    tft: np.ndarray           # int64
-    pos_body: np.ndarray | None = None   # flat int64; offsets via cumsum(tfb)
-    pos_title: np.ndarray | None = None
-    blk_last: np.ndarray | None = None   # per-block last doc id
-    blk_max_tfb: np.ndarray | None = None
-    blk_max_tft: np.ndarray | None = None
-    blk_min_dl: np.ndarray | None = None
-    blk_min_tl: np.ndarray | None = None
-
-
-def decode_term_row(row, need_positions: bool, need_blocks: bool) -> TermChunk:
-    docs = delta_decode_docs(row.doc_ids)
-    tfb = vb_decode(row.tfs_body).astype(np.int64)
-    tft = vb_decode(row.tfs_title).astype(np.int64)
-    tc = TermChunk(docs=docs, tfb=tfb, tft=tft)
-    if need_positions:
-        tc.pos_body = decode_positions(row.pos_body, tfb)
-        tc.pos_title = decode_positions(row.pos_title, tft)
-    if need_blocks:
-        tc.blk_last = delta_decode_docs(row.blk_last_doc)
-        tc.blk_max_tfb = vb_decode(row.blk_max_tfb).astype(np.int64)
-        tc.blk_max_tft = vb_decode(row.blk_max_tft).astype(np.int64)
-        tc.blk_min_dl = vb_decode(row.blk_min_dl).astype(np.int64)
-        tc.blk_min_tl = vb_decode(row.blk_min_tl).astype(np.int64)
-    return tc
-
-
-@dataclass
-class ChunkDocs:
-    doc_ids: np.ndarray    # int64, ascending — every doc in the chunk
-    doc_lens: np.ndarray   # int64
-    title_lens: np.ndarray
-
-    def lengths(self, ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """float64 (doc_len, title_len) of ``ids``, docs of this chunk."""
-        pos = np.searchsorted(self.doc_ids, ids)
-        return (
-            self.doc_lens[pos].astype(np.float64),
-            self.title_lens[pos].astype(np.float64),
-        )
-
-
-def decode_doclens_row(row) -> ChunkDocs:
-    return ChunkDocs(
-        doc_ids=delta_decode_docs(row.doc_ids),
-        doc_lens=vb_decode(row.doc_lens).astype(np.int64),
-        title_lens=vb_decode(row.title_lens).astype(np.int64),
-    )
 
 
 _EMPTY_I64 = np.empty(0, dtype=np.int64)

@@ -10,7 +10,7 @@ so the hot path stays in numpy — no per-row Python):
 
 1. Each posting row carries per-block (``block_docs`` postings) metadata:
    max tf_body/tf_title and min doc_len/title_len
-   (``build/kernels.py:merge_groups_vectorized``).  From these and the
+   (``functions/codec.py:merge_groups_vectorized``).  From these and the
    per-column IDF an upper bound on the column's score contribution for
    any doc inside the block is computed — BM25's term weight is monotone
    increasing in tf and decreasing in doc length, so
@@ -36,11 +36,11 @@ from __future__ import annotations
 
 import numpy as np
 
+from search_engine_spark.functions.codec import TermChunk
 from search_engine_spark.query.kernels import (
     _EMPTY_F64,
     _EMPTY_I64,
     ChunkInput,
-    TermChunk,
     bm25_gather,
     scored_columns,
 )

@@ -24,9 +24,8 @@ import numpy as np
 import pandas as pd
 
 from search_engine_spark.functions.bm25 import fielded_bm25
+from search_engine_spark.functions.codec import ChunkDocs, TermChunk
 from search_engine_spark.query.kernels import (
-    ChunkDocs,
-    TermChunk,
     _membership,
     frame_of,
     read_chunk,

@@ -74,7 +74,8 @@ from pyspark.sql import SparkSession
 
 from search_engine_spark.config import EngineConfig
 from search_engine_spark.plans.parser import SearchMode
-from search_engine_spark.query.engine import _LRU, SearchEngine
+from search_engine_spark.query.engine import SearchEngine
+from search_engine_spark.sources.index_store import _LRU
 
 
 # most requests one wave carries

@@ -19,7 +19,9 @@ manifest would give us):
     blk_min_dl(bin), blk_min_tl(bin).  Each chunk's doc lengths are its
     reserved-term "" row (df = doc count, tfs_body/tfs_title = doc/title
     lengths), emitted by the posting merge from the single tokenize pass
-    (build/kernels.py) and read back by ``read_doclens``
+    and read back by ``read_doclens``.  ``functions/codec.py`` is the one
+    module that encodes and decodes these rows (``read_doc_lens``
+    decodes through it)
 ``term_stats/bucket=B/``  term, df, n_chunks   (finalize artifact)
 ``stats/``       num_docs, avg_doc_len, avg_title_len, max_doc_len,
                  max_title_len, total_postings, sum_doc_len,
@@ -55,6 +57,7 @@ import functools
 import json
 import os
 import threading
+from collections import OrderedDict
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -62,6 +65,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from search_engine_spark.config import EngineConfig
+from search_engine_spark.functions.codec import decode_doclens_row, term_bucket
 
 POSTINGS_SCHEMA = T.StructType(
     [
@@ -107,6 +111,43 @@ LAYOUT_FIELDS = (
 # the docs-table metadata a doc-info lookup returns, in tuple order
 DOC_INFO_COLS = ("repo", "path", "commit", "lang")
 
+# terms whose df ``term_stats_for`` memoizes: a long-lived server sees an
+# unbounded stream of distinct tokens, out-of-vocabulary typos included
+_DF_MEMO_SIZE = 1 << 16
+
+
+class _LRU:
+    """Thread-safe map bounded to ``size`` entries, evicting the least
+    recently read or written; size 0 stores nothing."""
+
+    def __init__(self, size: int):
+        self._size = size
+        self._d: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+
+    def __len__(self) -> int:
+        return len(self._d)
+
+    def get_many(self, keys) -> dict:
+        """The cached subset of ``keys``; each hit becomes most recent."""
+        with self._lock:
+            out = {}
+            for k in keys:
+                if k in self._d:
+                    self._d.move_to_end(k)
+                    out[k] = self._d[k]
+            return out
+
+    def put_many(self, items: dict) -> None:
+        if not self._size:
+            return
+        with self._lock:
+            for k, v in items.items():
+                self._d[k] = v
+                self._d.move_to_end(k)
+            while len(self._d) > self._size:
+                self._d.popitem(last=False)
+
 
 class IndexStore:
     def __init__(self, spark: SparkSession, index_dir: str, config: EngineConfig):
@@ -117,6 +158,7 @@ class IndexStore:
         # threads: parallel appends to one parquet dir can collide on the
         # committer's _temporary staging
         self._lineage_lock = threading.Lock()
+        self._df_memo = _LRU(_DF_MEMO_SIZE)
         # an existing index's layout wins over the caller's
         self.load_meta_into_config()
 
@@ -354,35 +396,67 @@ class IndexStore:
         O(increment) doc lengths instead of the whole index)."""
 
         def decode(batches):
-            import pandas as pd
-
-            from search_engine_spark.functions.codec import (
-                delta_decode_docs,
-                vb_decode,
-            )
-
             import numpy as np
+            import pandas as pd
 
             for pdf in batches:
                 if not len(pdf):
                     continue
-                ids, dls, tls = [], [], []
-                for row in pdf.itertuples(index=False):
-                    ids.append(delta_decode_docs(row.doc_ids))
-                    dls.append(vb_decode(row.doc_lens))
-                    tls.append(vb_decode(row.title_lens))
+                chunks = [
+                    decode_doclens_row(r) for r in pdf.itertuples(index=False)
+                ]
                 # one frame per Arrow batch, not per chunk row
                 yield pd.DataFrame(
                     {
-                        "doc_id": np.concatenate(ids),
-                        "doc_len": np.concatenate(dls).astype("int32"),
-                        "title_len": np.concatenate(tls).astype("int32"),
+                        "doc_id": np.concatenate([c.doc_ids for c in chunks]),
+                        "doc_len": np.concatenate(
+                            [c.doc_lens for c in chunks]
+                        ).astype("int32"),
+                        "title_len": np.concatenate(
+                            [c.title_lens for c in chunks]
+                        ).astype("int32"),
                     }
                 )
 
         return self.read_doclens(batches).mapInPandas(
             decode, "doc_id long, doc_len int, title_len int"
         )
+
+    @staticmethod
+    def parquet_rows(paths) -> int:
+        """Exact row count from parquet FOOTERS (driver-side metadata
+        read, no Spark job) — the count gates of ``build_docs`` and the
+        streaming ``advance`` run on unfiltered parquet dirs/files, where
+        the footer sum is the same number a ``.count()`` job would
+        return.  O(#files) footer opens; at production increment sizes
+        that is milliseconds vs a full scheduler round-trip per gate.
+
+        Every listed path must exist: the fast path hands this the exact
+        sink-log delta file list that ``spark.read.parquet(*delta)`` will
+        scan, and silently skipping a vanished file would undercount the
+        gate and surface later as a confusing snapshot row-count
+        mismatch instead of the real missing-file error."""
+        import pyarrow.dataset as pads
+
+        if isinstance(paths, str):
+            paths = [paths]
+        locs = [p[7:] if p.startswith("file://") else p for p in paths]
+        missing = [p for p in locs if not os.path.exists(p)]
+        if missing:
+            raise FileNotFoundError(
+                "listed parquet path(s) do not exist: " + ", ".join(missing)
+            )
+        if not locs:
+            return 0
+        # pyarrow only accepts directories as a SINGLE path argument —
+        # split dirs from plain files and sum fragment footers
+        dirs = [p for p in locs if os.path.isdir(p)]
+        files = [p for p in locs if not os.path.isdir(p)]
+        total = 0
+        for src in dirs + ([files] if files else []):
+            d = pads.dataset(src, format="parquet")
+            total += sum(f.metadata.num_rows for f in d.get_fragments())
+        return total
 
     def read_stats(self) -> dict:
         """The one-row collection stats table, read DRIVER-SIDE with
@@ -400,7 +474,8 @@ class IndexStore:
         groups whose ``term`` min/max can hold a query term are read
         (``point_lookup``; bucket files are term-sorted).
         A query's term-stats lookup thus runs no Spark job.  Results are
-        memoized per store instance (the index is immutable once opened).
+        memoized per store instance (the index is immutable once opened)
+        in an LRU of ``_DF_MEMO_SIZE`` terms.
 
         A missing ``term_stats`` root raises — e.g. a reader racing the
         directory swap of ``finalize_incremental`` — rather than pricing
@@ -410,10 +485,8 @@ class IndexStore:
 
         if not tokens:
             return {}
-        cache = getattr(self, "_df_cache", None)
-        if cache is None:
-            cache = self._df_cache = {}
-        missing = sorted({t for t in tokens if t not in cache})
+        dfs = self._df_memo.get_many(set(tokens))
+        missing = sorted(set(tokens) - dfs.keys())
         if missing:
             by_bucket: dict[int, list[str]] = {}
             for t in missing:
@@ -433,9 +506,10 @@ class IndexStore:
                 raise FileNotFoundError(
                     f"term_stats table missing: {self.term_stats_path}"
                 )
-            for t in missing:
-                cache[t] = found.get(t, 0)
-        return {t: cache[t] for t in set(tokens) if cache[t] > 0}
+            fetched = {t: found.get(t, 0) for t in missing}
+            self._df_memo.put_many(fetched)
+            dfs.update(fetched)
+        return {t: df for t, df in dfs.items() if df > 0}
 
 
 def row_groups_for(frag, key: str, keys: list) -> list[int]:
@@ -473,12 +547,3 @@ def point_lookup(fragments, key: str, keys, columns: list[str]) -> list[dict]:
                 .to_pylist()
             )
     return rows
-
-
-def term_bucket(term: str, n_buckets: int) -> int:
-    """Deterministic, language-independent term shard (same value computable
-    in Spark SQL via ``crc32(encode(term,'utf-8')) % n``)."""
-    import zlib
-
-    return zlib.crc32(term.encode("utf-8")) % n_buckets
-

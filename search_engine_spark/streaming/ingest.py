@@ -176,42 +176,6 @@ class StreamingIndexer:
     def _tail_dir(self, version: int) -> str:
         return os.path.join(self.staging_dir, "tail", f"v{version}")
 
-    @staticmethod
-    def _parquet_rows(paths) -> int:
-        """Exact row count from parquet FOOTERS (driver-side metadata
-        read, no Spark job) — the count gates in :meth:`advance` run
-        once per increment on unfiltered parquet dirs/files, where the
-        footer sum is the same number a ``.count()`` job would return.
-        O(#files) footer opens; at production increment sizes that is
-        milliseconds vs a full scheduler round-trip per gate.
-
-        Every listed path must exist: the fast path hands this the exact
-        sink-log delta file list that ``spark.read.parquet(*delta)`` will
-        scan, and silently skipping a vanished file would undercount the
-        gate and surface later as a confusing snapshot row-count
-        mismatch instead of the real missing-file error."""
-        import pyarrow.dataset as pads
-
-        if isinstance(paths, str):
-            paths = [paths]
-        locs = [p[7:] if p.startswith("file://") else p for p in paths]
-        missing = [p for p in locs if not os.path.exists(p)]
-        if missing:
-            raise FileNotFoundError(
-                "listed parquet path(s) do not exist: " + ", ".join(missing)
-            )
-        if not locs:
-            return 0
-        # pyarrow only accepts directories as a SINGLE path argument —
-        # split dirs from plain files and sum fragment footers
-        dirs = [p for p in locs if os.path.isdir(p)]
-        files = [p for p in locs if not os.path.isdir(p)]
-        total = 0
-        for src in dirs + ([files] if files else []):
-            d = pads.dataset(src, format="parquet")
-            total += sum(f.metadata.num_rows for f in d.get_fragments())
-        return total
-
     def _staging_marker_path(self) -> str:
         return os.path.join(self.staging_dir, "compacted_upto.json")
 
@@ -343,7 +307,7 @@ class StreamingIndexer:
 
         if os.path.isdir(store.docs_path):
             docs = store.read_docs()
-            n_existing = self._parquet_rows(store.docs_path)
+            n_existing = store.parquet_rows(store.docs_path)
             lineage_docs = self._lineage_doc_count()
             if n_existing != lineage_docs:
                 # torn previous increment: docs rows appended but the
@@ -388,7 +352,7 @@ class StreamingIndexer:
             }
             # fast path inputs are raw parquet (tail snapshot + delta
             # files): their footer sums ARE the increment count
-            n_new_meta = scan["tail_rows"] + self._parquet_rows(delta)
+            n_new_meta = scan["tail_rows"] + store.parquet_rows(delta)
         else:
             # recovery (state missing or stale): one full rescan, key
             # anti-join drops already-indexed docs, duplicates between a
@@ -506,7 +470,7 @@ class StreamingIndexer:
             "doc_id", "repo", "path", "commit", "lang", "sha256"
         ).write.mode("append").parquet(store.docs_path)
         # footer-metadata gate — no Spark job
-        n_after = self._parquet_rows(store.docs_path)
+        n_after = store.parquet_rows(store.docs_path)
         if n_after != n_index_to:
             raise RuntimeError(
                 f"streaming docs append corrupted: expected {n_index_to} "

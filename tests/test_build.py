@@ -7,6 +7,7 @@ per doc; df == len(doc_ids); codec round-trips through the written index.
 
 from __future__ import annotations
 
+import dataclasses
 import hashlib
 
 import numpy as np
@@ -49,6 +50,22 @@ def test_docs_table_invariants(built, spark):
         assert (d.repo, d.path, d.commit) == (e["repo"], e["path"], e["commit"])
         assert d.sha256 == hashlib.sha256(e["content"].encode()).hexdigest()
     assert stats["num_docs"] == len(rows)
+
+
+def test_build_docs_gate_catches_dropped_ids(spark, tmp_path, monkeypatch):
+    """The id-assignment gate counts the written docs files' footers: an
+    assignment that loses a row fails the build instead of corrupting
+    every posting downstream."""
+    import search_engine_spark.build.builder as builder_mod
+
+    assign = builder_mod.assign_doc_ids
+    monkeypatch.setattr(
+        builder_mod, "assign_doc_ids",
+        lambda df, **kw: assign(df, **kw).where(F.col("doc_id") != 0),
+    )
+    corpus = spark.createDataFrame(synth_corpus(n_docs=20, seed=1))
+    with pytest.raises(RuntimeError, match="20 corpus rows -> 19 docs rows"):
+        IndexBuilder(spark, str(tmp_path / "idx"), CFG).build_docs(corpus)
 
 
 def test_postings_match_oracle_index(built):
@@ -349,7 +366,7 @@ def test_load_corpus_table_prefix_forces_catalog(spark):
 
 
 def test_concurrent_batches_equal_serial(spark, tmp_path):
-    """build_postings(concurrency=3) pipelines independent lineage
+    """EngineConfig(build_concurrency=3) pipelines independent lineage
     batches as concurrent Spark jobs; the resulting index must be
     IDENTICAL to a serial build — same postings rows, same stats, same
     committed lineage coverage — because each batch writes only its own
@@ -361,8 +378,11 @@ def test_concurrent_batches_equal_serial(spark, tmp_path):
     )
     b_ser = IndexBuilder(spark, str(tmp_path / "ser"), cfg)
     s_ser = b_ser.build_all(corpus)
-    b_con = IndexBuilder(spark, str(tmp_path / "con"), cfg)
-    s_con = b_con.build_all(corpus, concurrency=3)
+    b_con = IndexBuilder(
+        spark, str(tmp_path / "con"),
+        dataclasses.replace(cfg, build_concurrency=3),
+    )
+    s_con = b_con.build_all(corpus)
 
     assert sorted(b_con.store.committed_batches()) == sorted(
         b_ser.store.committed_batches()

@@ -88,18 +88,19 @@ def test_compact_preserves_results_and_collapses_batches(built, spark):
 def test_vacuum_removes_legacy_doclens_copies(built, spark):
     """Indexes built before doc lengths were read from the postings' ""
     rows kept a doclens/batch=K copy per batch.  Such an index still
-    opens (nothing reads the copies) and vacuum drops the copy of a
-    batch no lineage row references, like that batch's postings."""
+    opens (nothing reads the copies) and vacuum drops the whole doclens/
+    tree, the copies of live batches included."""
     builder, index_dir = built
     before = _results(spark, index_dir)
     (live,) = builder.store.committed_batches()  # compacted above
-    stale = os.path.join(index_dir, "doclens", "batch=0")
-    kept = os.path.join(index_dir, "doclens", f"batch={live}")
-    builder.store.read_doclens().write.parquet(stale)
-    builder.store.read_doclens().write.parquet(kept)
+    legacy = os.path.join(index_dir, "doclens")
+    for b in (0, live):
+        builder.store.read_doclens().write.parquet(
+            os.path.join(legacy, f"batch={b}")
+        )
     assert _results(spark, index_dir) == before
-    assert builder.vacuum()["removed_dirs"] == [stale]
-    assert _batch_dirs(index_dir, "doclens") == [f"batch={live}"]
+    assert builder.vacuum()["removed_dirs"] == [legacy]
+    assert not os.path.exists(legacy)
     assert _results(spark, index_dir) == before
 
 

@@ -707,6 +707,28 @@ def test_driver_term_stats_equal_spark_read(spark, tmp_path):
     assert store.term_stats_for(vocab[:5])
 
 
+def test_term_stats_memo_is_bounded(setup, monkeypatch):
+    """A long-lived store looks up an unbounded stream of distinct
+    tokens (typos included): the df memo keeps at most its bound, and a
+    term it evicted is read again with the right df."""
+    from search_engine_spark.sources import index_store
+
+    engine, oracle = setup
+    monkeypatch.setattr(index_store, "_DF_MEMO_SIZE", 4)
+    store = index_store.IndexStore(
+        engine.spark, str(engine.store.dir), engine.config
+    )
+    vocab = sorted(oracle.index)[:6]
+    typos = [f"zzqtypo{i}" for i in range(6)]
+    want = {t: len(oracle.index[t].doc_ids) for t in vocab}
+    for t in vocab + typos:  # 12 distinct lookups, bound 4
+        store.term_stats_for([t])
+    assert len(store._df_memo) <= 4
+    assert store.term_stats_for(vocab) == want
+    assert len(store._df_memo) <= 4
+    assert store.term_stats_for(typos) == {}
+
+
 def test_engine_resolves_docs_table_once(setup, monkeypatch):
     """Doc info, filters and facets read the docs frame the engine
     resolved at open, so none of them pays the docs table's

@@ -275,7 +275,7 @@ def test_feature_values_match_reference_semantics(setup):
     engine, oracle = setup
     import pandas as pd
 
-    from search_engine_spark.query.kernels import (
+    from search_engine_spark.functions.codec import (
         decode_doclens_row,
         decode_term_row,
     )
